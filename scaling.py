@@ -155,8 +155,9 @@ def _curate_pipeline(spark, sf_dir: str):
     deterministically synthesized PPM payloads (the q_multimodal_phash_
     dedup fixture encoder), MinHash near-dup on, embedding
     decontamination against the src0 eval suite, per-source domain cap.
-    Returns the stats relation -- materializing it executes every
-    stage."""
+    Returns the stats relation. The call itself runs the near-dup rounds
+    and the verdict pin's shuffle stages; materializing the relation runs
+    the rest, so a timer must cover both."""
     from pyspark.sql import functions as F
 
     from weighted_raster_overlay_service_toolbox_spark.operators.multimodal import (

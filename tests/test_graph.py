@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from weighted_raster_overlay_service_toolbox_spark.operators.graph import (
-    cluster_sizes,
     connected_components,
 )
 
@@ -39,15 +38,6 @@ def test_edge_order_and_direction_irrelevant(spark):
     a = _components(spark, [(5, 9), (9, 7), (3, 5)])
     b = _components(spark, [(7, 9), (5, 3), (9, 5)])
     assert a == b == {3: 3, 5: 3, 7: 3, 9: 3}
-
-
-def test_cluster_sizes(spark):
-    edges = spark.createDataFrame([(1, 2), (2, 3), (8, 9)], "src long, dst long")
-    comp = connected_components(edges)
-    sizes = {
-        r["component"]: r["n_members"] for r in cluster_sizes(comp).collect()
-    }
-    assert sizes == {1: 3, 8: 2}
 
 
 def test_num_partitions_bounds_state_without_touching_session_conf(spark):

@@ -215,3 +215,51 @@ def test_half_a_decontamination_request_raises(spark):
         curate_corpus(docs, embeddings=emb)
     with pytest.raises(ValueError, match="embeddings"):
         curate_corpus(docs, eval_ids=ev)
+
+
+def _answer(kept, dropped, stats):
+    return (
+        sorted(r["doc_id"] for r in kept.collect()),
+        sorted((r["doc_id"], r["reason"]) for r in dropped.collect()),
+        sorted((r["reason"], r["n"]) for r in stats.collect()),
+    )
+
+
+def test_pin_storage_modes_give_the_same_answer(spark, monkeypatch):
+    """The verdict pin is a storage choice, not a semantic one: the
+    lineage-keeping modes (disk persist, no pin) give exactly the answer
+    of the default localCheckpoint."""
+    answers = {}
+    for mode in ("checkpoint", "disk", "none"):
+        monkeypatch.setenv("SPARK_GRAFT_PIN_STORAGE", mode)
+        answers[mode] = _answer(
+            *curate_corpus(_docs(spark), near_dup=True, docs_per_source=1)
+        )
+    assert answers["disk"] == answers["checkpoint"]
+    assert answers["none"] == answers["checkpoint"]
+    # every stage the call enables fires on the fixture
+    assert {r for _, r in answers["checkpoint"][1]} == {
+        "too_short", "repetitive", "duplicate", "near_duplicate",
+        "domain_capped",
+    }
+
+
+def test_outputs_share_one_cascade_run(spark, monkeypatch):
+    """kept, dropped and stats read one pinned verdict, so materializing
+    all three does not re-run the cascade per output (44 jobs on this
+    fixture when each output re-ran it; 7 with the pin)."""
+    monkeypatch.delenv("SPARK_GRAFT_PIN_STORAGE", raising=False)
+    kept, dropped, stats = curate_corpus(
+        _docs(spark), near_dup=True, docs_per_source=1
+    )
+    sc = spark.sparkContext
+    group = "test-curate-single-evaluation"
+    sc.setJobGroup(group, "materialize kept, dropped and stats")
+    try:
+        _answer(kept, dropped, stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 10, sorted(jobs)

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from weighted_raster_overlay_service_toolbox_spark.operators.text import (
     fingerprint,
-    marker_score,
-    quality_features,
     term_frequencies,
     tfidf,
     tokenize,
@@ -45,27 +43,6 @@ def test_tfidf_zero_for_ubiquitous_terms(spark):
     assert rows[(3, "cat")] == round(3 * math.log(3 / 2), 4)
     # 'dog' appears in 1 of 3: idf = ln(3)
     assert rows[(2, "dog")] == round(math.log(3.0), 4)
-
-
-def test_quality_features_values(spark):
-    q = {r["doc_id"]: r for r in quality_features(_docs(spark), "doc_id").collect()}
-    assert q[1]["n_toks"] == 6 and q[1]["long_enough"]
-    assert q[2]["n_toks"] == 2 and not q[2]["long_enough"]
-    # doc 3: 3 tokens, 1 distinct -> TTR 1/3
-    assert q[3]["type_token_ratio"] == round(1 / 3, 4)
-
-
-def test_marker_score_fraction(spark):
-    from pyspark.sql import functions as F
-
-    got = {
-        r["doc_id"]: r["s"]
-        for r in _docs(spark)
-        .select("doc_id", marker_score("text", ["the", "on"]).alias("s"))
-        .collect()
-    }
-    assert got[1] == 0.5  # 3 of 6 tokens
-    assert got[3] == 0.0
 
 
 def test_fingerprint_order_invariant(spark):

@@ -33,14 +33,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _seeded_hash(i: int):
-    """One-arg lambda factory. MUST be a factory: a ``lambda t, i=i`` has
-    two parameters, and ``F.transform`` treats two-parameter lambdas as
-    (element, index) -- the "seed" silently becomes the array position and
-    every seed yields the same hash."""
-    return lambda t: F.xxhash64(F.lit(i), t)
-
-
 def portable_hash60(c: Column, seed: int | None = None) -> Column:
     """60-bit cross-engine token hash: the leading 15 hex chars of md5 as
     a BIGINT. Bit-identical in Spark (``conv(substring(md5(x),1,15),16,10)``)
@@ -99,27 +91,6 @@ def minhash_signature_from_base(base: Column, k: int) -> Column:
                 )
             )
             for a, b in minhash_affine_consts(k)
-        ]
-    )
-
-
-def minhash_signature(tokens: Column, k: int) -> Column:
-    """k seeded min-hashes over a token array as one array<long> column
-    (xxhash64 scale path; see :func:`minhash_signature_from_base` for the
-    oracle-portable family)."""
-    return F.array(
-        *[F.array_min(F.transform(tokens, _seeded_hash(i))) for i in range(k)]
-    )
-
-
-def lsh_band_hashes(sig: Column, k: int, bands: int) -> Column:
-    """Hash each of ``bands`` signature slices into one value; two docs
-    collide in a band iff that slice matches exactly."""
-    r = k // bands
-    return F.array(
-        *[
-            F.xxhash64(*[sig[i] for i in range(b * r, (b + 1) * r)])
-            for b in range(bands)
         ]
     )
 

@@ -170,11 +170,3 @@ def _run_rounds(
     # sum above ran them); the edge cache is no longer referenced.
     sym.unpersist()
     return labels
-
-
-def cluster_sizes(components: DataFrame) -> DataFrame:
-    """``(component, n_members)`` summary -- the dedup keep-one scan reads
-    this to pick one canonical doc per cluster (e.g. MIN node)."""
-    return components.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )

@@ -1,5 +1,5 @@
 """Text-analysis operators for document corpora: tokenization, term
-statistics, TF-IDF, quality features, language scoring, fingerprints.
+statistics, TF-IDF, repetition features, fingerprints, BPE.
 
 All pure column expressions / built-in aggregations -- no Python in the
 hot path. Shuffle shapes (the 100 TB concerns):
@@ -79,35 +79,6 @@ def tfidf(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
             .alias("tfidf"),
         )
     )
-
-
-def quality_features(
-    docs: DataFrame, id_col: str, text_col: str = "text", min_tokens: int = 5
-) -> DataFrame:
-    """Corpus-filter features: token count, mean token length, type-token
-    ratio, keep flag."""
-    toks = tokens_of(text_col)
-    n = F.size(toks)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        n.alias("n_toks"),
-        duck_round(F.length(text_col).cast("double") / n, 4)
-        .cast("double")
-        .alias("avg_tok_len"),
-        duck_round(F.size(F.array_distinct(toks)).cast("double") / n, 4)
-        .cast("double")
-        .alias("type_token_ratio"),
-        (n >= min_tokens).alias("long_enough"),
-    )
-
-
-def marker_score(text_col: str | Column, markers: list[str]) -> Column:
-    """Fraction of tokens found in a marker lexicon (language-ID and
-    topic heuristics); pure column expression."""
-    toks = tokens_of(text_col)
-    arr = F.array(*[F.lit(m) for m in markers])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-    return duck_round(hits.cast("double") / F.size(toks), 4).cast("double")
 
 
 def word_ngrams_from_tokens(toks: Column, n: int = 3) -> Column:

@@ -11,12 +11,23 @@ No reference anchor (the reference has no text pipeline); the stage set
 mirrors the public corpus-curation recipes (C4/Gopher-style quality
 rules, fingerprint dedup, MinHash clustering, per-domain caps).
 
-Scale posture: every stage is a declarative DataFrame transform -- the
-whole pipeline is ONE lazily-built plan per output; nothing collects to
-the driver. Stage costs: quality/fingerprint are narrow + one hash
-shuffle; near-dup clustering (opt-in) adds the banded-LSH join and the
-iterative component rounds (operators/graph.py); the domain cap is one
-window shuffle keyed by source.
+Scale posture: every stage is a declarative DataFrame transform, but not
+all of the work waits for the caller's first action.
+
+- At call time: near-dup clustering (opt-in) runs its connected-component
+  rounds eagerly, collecting one convergence sum to the driver per round
+  (operators/graph.py). The cascade ends in one pinned ``(id, reason)``
+  verdict (plans/pinning.py ``pin_corpus``); in the default
+  ``checkpoint`` mode, building the pin runs the cascade's shuffle stages.
+- At materialization: the pin's final stage, then ``kept`` (a semi-join of
+  ``docs`` against the verdict), ``dropped`` (a filter of it) and
+  ``stats`` (one ``groupBy`` over it). All three read the same verdict, so
+  materializing all three runs the cascade once, not once per output.
+
+Stage costs: quality/fingerprint are narrow + one hash shuffle; near-dup
+clustering adds the banded-LSH join and the component rounds; the domain
+cap is one window shuffle keyed by source. Only the convergence sums and
+whatever the caller collects reach the driver.
 """
 
 from __future__ import annotations
@@ -27,6 +38,7 @@ from pyspark.sql import functions as F
 from .operators.dedup import minhash_candidates, minhash_verified_edges
 from .operators.graph import connected_components
 from .operators.text import fingerprint, repetition_features, tokens_of
+from .plans.pinning import pin_corpus
 
 
 def curate_corpus(
@@ -301,14 +313,20 @@ def curate_corpus(
             .drop("_dc_reason")
         )
 
+    # The three outputs share one (id, reason) verdict: pinned once, so a
+    # caller that materializes all three runs the cascade once, not three
+    # times. SPARK_GRAFT_PIN_STORAGE=none keeps full lineage instead.
+    verdict = staged.select(id_col, "_reason").transform(pin_corpus)
     kept = docs.join(
-        staged.filter(F.col("_reason").isNull()).select(id_col), id_col, "left_semi"
+        verdict.filter(F.col("_reason").isNull()).select(id_col),
+        id_col,
+        "left_semi",
     )
-    dropped = staged.filter(F.col("_reason").isNotNull()).select(
+    dropped = verdict.filter(F.col("_reason").isNotNull()).select(
         id_col, F.col("_reason").alias("reason")
     )
     stats = (
-        staged.select(F.coalesce("_reason", F.lit("kept")).alias("reason"))
+        verdict.select(F.coalesce("_reason", F.lit("kept")).alias("reason"))
         .groupBy("reason")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -4,16 +4,23 @@ Several token-stream queries (tfidf base, rare-token ratio, approx-topk,
 unigram logprob, collocations, the banded dedup signatures, the semantic
 dedup assignment) pin an exploded corpus-sized relation so that multiple
 consumers (counts + totals + self-join sides) share ONE source scan. The
-round-6/7 default is a non-eager ``localCheckpoint``: cheapest at fixture
+round-6/7 default is ``localCheckpoint(eager=False)``: cheapest at fixture
 scale (~0.10-0.16 s/query at sf0.1, A/B table in PLANS.md), but it holds
 the relation in executor storage WITHOUT recompute-on-loss -- a lost
 executor fails the job, and at 100 TB the pinned relation may not fit.
+
+``eager=False`` defers only the final stage. Under AQE (pyspark 4.1.2)
+building the pin runs every shuffle-map stage of the plan at once: a
+probe on a ``groupBy`` + join plan ran 2 jobs before any action. A pin
+call therefore costs the upstream shuffles where it is made, not where
+its result is first read.
 
 ``pin_corpus`` keeps that default and makes the trade a deployment knob
 (VERDICT r7 #6 / ADVICE r7) via ``SPARK_GRAFT_PIN_STORAGE``:
 
 - ``checkpoint`` (default): ``localCheckpoint(eager=False)`` -- single
-  scan, lineage truncated, executor memory, no recompute-on-loss.
+  scan, lineage truncated, executor memory, no recompute-on-loss; the
+  plan's shuffle stages run when the pin is built (see above).
 - ``disk``: ``persist(StorageLevel.DISK_ONLY)`` -- single scan, blocks
   spill to executor-local disk, lineage KEPT so a lost block recomputes
   instead of failing the job. The right setting for long-running 100 TB
