@@ -4,8 +4,15 @@ of the reference would actually switch to. Edge cases cite the reference
 
 from __future__ import annotations
 
+import math
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from weighted_raster_overlay_service_toolbox_spark import toolbox
+from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+from weighted_raster_overlay_service_toolbox_spark.sources import catalog_store
 from weighted_raster_overlay_service_toolbox_spark.toolbox import (
     create_wro_catalog,
     filter_layers,
@@ -405,3 +412,133 @@ def test_updates_reject_unknown_name(spark):
     assert errors.filter("code = 'unknown_name'").count() == 1
     _, errors2 = update_layer_info(catalog, "nope", title="X")
     assert errors2.filter("code = 'unknown_name'").count() == 1
+
+
+def _job_ids(spark, group, fn):
+    """The Spark jobs ``fn()`` runs, counted through a job group (the
+    pattern of test_pipeline's single-evaluation guard)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_error_frames_collect_without_a_job(spark):
+    """Error frames are local relations: collecting one runs no Spark job,
+    with rows or empty (a parallelized Python list ran one job of
+    Python-worker tasks per action)."""
+    rows = [("error", "contiguity", "1 non-contiguous range pairs")]
+    err = toolbox._err
+    assert _job_ids(spark, "test-err-rows", lambda: err(spark, rows).collect()) == []
+    assert _job_ids(spark, "test-err-empty", lambda: err(spark, []).collect()) == []
+    assert [tuple(r) for r in err(spark, rows).collect()] == rows
+    assert err(spark, []).collect() == []
+
+
+def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path):
+    """On a parquet-backed catalog, a classification edit runs one job for
+    the key check and one to collect the value table (6 with the Spark
+    sort, the two-job key check and a Python-list error frame); a
+    layer-info edit runs only the key check (3 before)."""
+    path = str(tmp_path / "catalog")
+    layers = _layers(spark, [("elev", "Elevation"), ("slope", "Slope")])
+    cells = _cells(spark, [("elev", 1, 0.0), ("elev", 2, 100.0), ("slope", 1, 5.0)])
+    built, _ = create_wro_catalog(layers, cells)
+    catalog_store.create_catalog(spark, path)
+    catalog_store.append_rows(spark, path, built)
+    cat = catalog_store.load_catalog(spark, path)
+    ranges = spark.createDataFrame(
+        [("high", 50.0, 101.0, 8), ("low", 0.0, 50.0, 2)],
+        "label string, lo double, hi double, out int",
+    )
+
+    def classify():
+        updated, errors = update_classification(cat, "elev", ranges)
+        assert errors.collect() == []
+        return updated
+
+    assert 0 < len(_job_ids(spark, "test-classify-jobs", classify)) <= 2
+
+    def layer_info():
+        _, errors = update_layer_info(cat, "slope", title="Slope (deg)")
+        assert errors.collect() == []
+
+    assert 0 < len(_job_ids(spark, "test-layer-info-jobs", layer_info)) <= 1
+    # the answers are those of the keyed edits, not of the job counting
+    row = classify().filter("Name = 'elev'").first()
+    assert row["InputRanges"] == "0.0,50.0,50.0,101.0"
+    assert row["OutputValues"] == "2,8"
+
+
+def _lo_key(v):
+    """Distinctness key for ``lo``: one null, one NaN, and 0.0 == -0.0."""
+    if v is None:
+        return "null"
+    return "nan" if math.isnan(v) else v + 0.0
+
+
+_bounds = st.one_of(
+    st.none(), st.just(float("nan")), st.floats(allow_nan=False)
+)
+
+
+@st.composite
+def _value_tables(draw):
+    los = draw(st.lists(_bounds, max_size=5, unique_by=_lo_key))
+    rows = []
+    for i, lo in enumerate(los):
+        # hi is often another row's lo, so contiguous tables occur
+        hi = draw(st.one_of(st.sampled_from(los + [None]), _bounds)) if los else None
+        rows.append((f"class {i}", lo, hi, draw(st.integers(-1, 10))))
+    stats = draw(st.one_of(st.none(), st.tuples(_bounds, _bounds)))
+    return rows, stats
+
+
+def _outcome(fn):
+    """Errors as (severity, code, message), or the exception an invalid
+    value table raises (a null bound fails driver-side comparisons)."""
+    try:
+        _, errors = fn()
+        return sorted(tuple(r) for r in errors.collect())
+    except TypeError as e:
+        return ("raised", str(e))
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_value_tables())
+def test_driver_range_sort_matches_spark_order_by(spark, monkeypatch, table):
+    """The driver-side sort keeps Spark's ascending ``orderBy("lo")``
+    order (nulls first, NaN after every number), so update_classification
+    gives the errors the Spark-sorted value table gave."""
+    rows, stats = table
+    ranges = local_frame(spark, rows, "label string, lo double, hi double, out int")
+    spark_order = ranges.orderBy("lo").collect()
+    assert [r["label"] for r in toolbox._sort_ranges(ranges.collect())] == [
+        r["label"] for r in spark_order
+    ]
+
+    catalog = local_frame(
+        spark, [("elev", "Elevation")], "Name string, Title string, "
+        "InputRanges string, OutputValues string, RangeLabels string",
+    )
+    stats_df = None if stats is None else local_frame(
+        spark, [stats], "mn double, mx double"
+    )
+
+    def edit():
+        return update_classification(catalog, "elev", ranges, stats_df)
+
+    driver_sorted = _outcome(edit)
+    with monkeypatch.context() as m:
+        m.setattr(toolbox, "_sort_ranges", lambda _rows: spark_order)
+        spark_sorted = _outcome(edit)
+    assert driver_sorted == spark_sorted

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..session import local_frame
+
 #: canonical catalog schema (``.pyt:592-603`` plus the system Name key).
 CATALOG_SCHEMA = StructType(
     [
@@ -68,7 +70,7 @@ def create_catalog(spark: SparkSession, path: str, overwrite: bool = False) -> N
         # a rebuilt store must start with a clean history even when the
         # live dir itself was already removed by the caller
         purge_history(path)
-    spark.createDataFrame([], CATALOG_SCHEMA).write.parquet(path)
+    local_frame(spark, [], CATALOG_SCHEMA).write.parquet(path)
 
 
 def _swap_paths(path: str) -> tuple[str, str]:

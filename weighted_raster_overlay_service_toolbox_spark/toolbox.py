@@ -5,8 +5,12 @@ The reference is an ArcGIS Python Toolbox with three tools
 (``WROS/Weighted Raster Overlay Service.pyt:35-39``); a user drives them
 through UI parameters and geodatabase cursors. Here each tool is a pure
 function: DataFrames in, (result DataFrame, errors DataFrame) out --
-validation messages become error rows instead of UI messages, and every
-step is a Catalyst plan (no driver-side loops over data).
+validation messages become error rows instead of UI messages. Every
+data-sized step is a Catalyst plan (no driver-side loops over data); the
+keyed edits' control path runs only the jobs its answer needs: one job
+checks the key, one job collects the UI-sized value table, whose sort and
+checks run on the driver, and error frames are local relations that
+collect without a job.
 
 - :func:`create_wro_catalog`  ~ CreateWeightedOverlayMosaic (``.pyt:570-1303``)
 - :func:`update_classification` ~ UpdateWROClassification (``.pyt:41-343``)
@@ -25,6 +29,8 @@ still tiny; the expensive side (stats) shuffles once on layer.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -40,6 +46,7 @@ from .functions.ranges import (
     ranges_to_labels,
     unique_value_ranges_expr,
 )
+from .session import local_frame
 
 #: catalog columns added by DDL in the reference (``.pyt:592-603``) plus
 #: the mosaic's system Name key.
@@ -58,9 +65,7 @@ DEFAULT_LABELS = ["Very Low", "Low", "Medium", "High", "Very High"]
 
 
 def _err(spark: SparkSession, rows: list[tuple[str, str, str]]) -> DataFrame:
-    return spark.createDataFrame(
-        rows, "severity string, code string, message string"
-    )
+    return local_frame(spark, rows, "severity string, code string, message string")
 
 
 def _no_errors(spark: SparkSession) -> DataFrame:
@@ -411,7 +416,7 @@ def match_uv_labels(
     n_attr = attr_df.count()
     n_col = colorizer_df.count()
     if n_attr != n_col:
-        empty = spark.createDataFrame([], "value double, label string, out int")
+        empty = local_frame(spark, [], "value double, label string, out int")
         return empty, _err(
             spark,
             [("warning", "uv_cardinality",
@@ -506,7 +511,7 @@ def update_classification(
     # the reference's layer picker guarantees the key exists (.pyt:120-125);
     # as a library call an unknown key must be an explicit error, not a
     # silent no-op update
-    if catalog_df.filter(F.col("Name") == name).limit(1).count() == 0:
+    if not _has_key(catalog_df, name):
         return catalog_df, _err(
             spark, [("error", "unknown_name", f"no catalog row named {name!r}")]
         )
@@ -522,13 +527,13 @@ def update_classification(
             F.min("value").alias("mn"), F.max("value").alias("mx")
         )
 
-    # ONE Spark action for all ranges_df validation: the value table is a
-    # UI parameter (a handful of rows, .pyt:80-87), so collect once and
-    # validate driver-side -- exactly the reference's own loop over
-    # value_tbl -- instead of separate count() jobs per check.
+    # ONE job collects the value table: it is a UI parameter (a handful
+    # of rows, .pyt:80-87), so it is sorted and validated on the driver --
+    # exactly the reference's own loop over value_tbl. A Spark orderBy
+    # would add sampling and shuffle jobs to sort a few rows.
     # (contiguity_errors stays the declared distributed R25 operator for
     # data-sized range tables; q_wro_contiguity exercises it.)
-    rows = ranges_df.orderBy("lo").collect()
+    rows = _sort_ranges(ranges_df.collect())
     bad_out = sum(1 for r in rows if r["out"] < 0 or r["out"] > 9)
     if bad_out:
         errs.append(
@@ -580,6 +585,28 @@ def update_classification(
     return updated, errors
 
 
+def _has_key(catalog_df: DataFrame, name: str) -> bool:
+    """Whether a catalog row named ``name`` exists, in one job (a
+    ``limit(1).count()`` runs two)."""
+    return not catalog_df.filter(F.col("Name") == name).isEmpty()
+
+
+def _sort_ranges(rows: list) -> list:
+    """Order value-table rows by ``lo`` the way Spark's ascending
+    ``orderBy("lo")`` does: nulls first, then numbers, then NaN (Spark
+    places NaN above every number, infinity included)."""
+
+    def key(r):
+        lo = r["lo"]
+        if lo is None:
+            return (0, 0.0)
+        if math.isnan(lo):
+            return (2, 0.0)
+        return (1, lo)
+
+    return sorted(rows, key=key)
+
+
 def _num_str(v: float) -> str:
     """Range bounds render like the reference's str(float) (.pyt:1132)."""
     return str(float(v))
@@ -615,7 +642,7 @@ def update_layer_info(
             errs.append(
                 ("error", "invalid_url", f"url must start with http(s)://: {url}")
             )
-    if catalog_df.filter(F.col("Name") == name).limit(1).count() == 0:
+    if not _has_key(catalog_df, name):
         errs.append(("error", "unknown_name", f"no catalog row named {name!r}"))
     errors = _err(spark, errs)
     if errs:
