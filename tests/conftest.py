@@ -18,6 +18,25 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(group, fn)``: the sorted ids of the Spark jobs ``fn()``
+    runs, counted through a job group after the listener bus drains."""
+
+    def run(group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -1,12 +1,20 @@
-"""Connected-components operator: known-graph truth + convergence."""
+"""Connected-components operator: known-graph truth, convergence, and
+the driver union-find path against the distributed rounds."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from weighted_raster_overlay_service_toolbox_spark.operators.graph import (
     connected_components,
 )
+from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+
+#: ``driver_max_edges`` values that force each path
+ROUNDS, DRIVER = 0, 2**31 - 2
 
 
 def _components(spark, pairs, **kw):
@@ -15,6 +23,15 @@ def _components(spark, pairs, **kw):
         r["node"]: r["component"]
         for r in connected_components(edges, **kw).collect()
     }
+
+
+def _rows(spark, pairs, driver_max_edges):
+    """Sorted ``(node, component)`` rows; a null node sorts last."""
+    edges = local_frame(spark, pairs, "src long, dst long")
+    rows = connected_components(edges, driver_max_edges=driver_max_edges).collect()
+    return sorted(
+        (tuple(r) for r in rows), key=lambda r: (r[0] is None, r[0] or 0)
+    )
 
 
 def test_chain_and_triangle_and_pair(spark):
@@ -26,10 +43,10 @@ def test_chain_and_triangle_and_pair(spark):
 
 
 def test_long_chain_converges_via_pointer_jumping(spark):
-    # a 40-node path has diameter 39; pointer jumping must converge well
+    # a 40-node path has diameter 39; the star rounds must converge well
     # inside max_iter=25 (one-hop propagation alone would need 39 rounds)
     pairs = [(i, i + 1) for i in range(40)]
-    got = _components(spark, pairs, max_iter=25)
+    got = _components(spark, pairs, max_iter=25, driver_max_edges=ROUNDS)
     assert set(got.values()) == {0}
     assert len(got) == 41
 
@@ -46,7 +63,8 @@ def test_num_partitions_bounds_state_without_touching_session_conf(spark):
     (VERDICT.md r3 'What's wrong' #1), and the answer must be identical."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
     got = _components(
-        spark, [(1, 2), (2, 3), (3, 4), (10, 11)], num_partitions=4
+        spark, [(1, 2), (2, 3), (3, 4), (10, 11)], num_partitions=4,
+        driver_max_edges=ROUNDS,
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
@@ -86,6 +104,77 @@ def test_matches_union_find_on_fixture_edges(spark):
         for r in connected_components(edges).collect()
     }
     assert got == truth
+
+
+@pytest.mark.parametrize("driver_max_edges", [ROUNDS, DRIVER])
+def test_edge_cases_match_on_both_paths(spark, driver_max_edges):
+    """A null endpoint joins no component and any null endpoint yields
+    exactly one (null, null) row; a self-loop yields its own node; an
+    empty edge list yields an empty frame."""
+    pairs = [(None, 5), (5, 6), (7, 7), (8, None), (6, 5)]
+    assert _rows(spark, pairs, driver_max_edges) == [
+        (5, 5), (6, 5), (7, 7), (8, 8), (None, None)
+    ]
+    assert _rows(spark, [], driver_max_edges) == []
+
+
+_endpoint = st.integers(-1, 80).map(lambda v: None if v < 0 else v)
+
+
+@st.composite
+def _graphs(draw):
+    """Random edge lists with duplicates, both directions, self-loops,
+    null endpoints, the empty graph and long chains (over 40 hops)."""
+    edges = draw(st.lists(st.tuples(_endpoint, _endpoint), max_size=30))
+    if draw(st.booleans()):
+        start, hops = draw(st.integers(40, 120)), draw(st.integers(41, 60))
+        flips = draw(st.lists(st.booleans(), min_size=hops, max_size=hops))
+        chain = [
+            (start + i + 1, start + i) if f else (start + i, start + i + 1)
+            for i, f in enumerate(flips)
+        ]
+        edges += draw(st.permutations(chain))
+    if edges:
+        again = draw(st.lists(st.sampled_from(edges), max_size=8))
+        edges += [(b, a) if draw(st.booleans()) else (a, b) for a, b in again]
+    return edges
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_graphs())
+@example([])
+@example([(None, 5), (5, 6), (7, 7), (8, None), (6, 5)])
+# the minimum at the high-id end of a 60-hop chain: min-label propagation
+# with pointer jumping did not converge on it in 25 rounds
+@example([(100 + i, 101 + i) for i in range(60)] + [(160, 3)])
+def test_driver_union_find_matches_rounds(spark, pairs):
+    """The driver path (T = infinity) returns exactly the rounds' rows
+    (T = 0): same nodes, same minimum labels, same null handling."""
+    assert _rows(spark, pairs, DRIVER) == _rows(spark, pairs, ROUNDS)
+
+
+def test_small_graph_runs_one_job(spark, job_ids):
+    """Below the threshold the edges are collected by one job and the
+    labels come back as a local relation, which collects without a job
+    (the rounds ran 30 jobs on this graph before the driver path)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10)], "src long, dst long"
+    )
+    jobs = job_ids(
+        "test-cc-driver-jobs", lambda: connected_components(edges).collect()
+    )
+    assert 0 < len(jobs) <= 1, jobs
+
+
+def test_driver_max_edges_out_of_range_is_rejected(spark):
+    edges = local_frame(spark, [(1, 2)], "src long, dst long")
+    for bad in (-1, 2**31 - 1):
+        with pytest.raises(ValueError, match="driver_max_edges"):
+            connected_components(edges, driver_max_edges=bad)
 
 
 def _pagerank_reference(edge_list, iterations=4):

@@ -129,8 +129,6 @@ CHECKPOINTED_ALLOWED = {
     "q_decay_agg",        # r8: pinned (type, t_us, value) feeds max + weights
     "q_decontaminate",
     "q_dedup_bloom",      # r8: pinned fp index + <=64-row Bloom word table
-    "q_dedup_clusters",
-    "q_dedup_keep_one",
     "q_dedup_minhash",
     "q_embed_outliers",   # r8: pinned flat (vec,pos,xq) feeds sums + join-back
     "q_entity_resolution",  # r10: pinned rec (census + final join) and
@@ -158,8 +156,6 @@ CHECKPOINTED_ALLOWED = {
     "q_source_overlap_sketch",  # r9: pinned (source, gram) distinct feeds
                                 # signatures + source list; pinned S*K
                                 # melted signature feeds both agree sides
-    "q_split_leakage_safe",     # r9: inherits q_dedup_clusters' pinned
-                                # signature relation + CC checkpoints
     "q_rare_token_ratio",
     "q_rrf_fusion",       # r14: pinned distinct-token stream feeds the
                           # sizes agg + the query-term probe join (one

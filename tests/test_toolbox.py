@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -414,33 +415,19 @@ def test_updates_reject_unknown_name(spark):
     assert errors2.filter("code = 'unknown_name'").count() == 1
 
 
-def _job_ids(spark, group, fn):
-    """The Spark jobs ``fn()`` runs, counted through a job group (the
-    pattern of test_pipeline's single-evaluation guard)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_error_frames_collect_without_a_job(spark):
+def test_error_frames_collect_without_a_job(spark, job_ids):
     """Error frames are local relations: collecting one runs no Spark job,
     with rows or empty (a parallelized Python list ran one job of
     Python-worker tasks per action)."""
     rows = [("error", "contiguity", "1 non-contiguous range pairs")]
     err = toolbox._err
-    assert _job_ids(spark, "test-err-rows", lambda: err(spark, rows).collect()) == []
-    assert _job_ids(spark, "test-err-empty", lambda: err(spark, []).collect()) == []
+    assert job_ids("test-err-rows", lambda: err(spark, rows).collect()) == []
+    assert job_ids("test-err-empty", lambda: err(spark, []).collect()) == []
     assert [tuple(r) for r in err(spark, rows).collect()] == rows
     assert err(spark, []).collect() == []
 
 
-def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path):
+def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path, job_ids):
     """On a parquet-backed catalog, a classification edit runs one job for
     the key check and one to collect the value table (6 with the Spark
     sort, the two-job key check and a Python-list error frame); a
@@ -462,17 +449,58 @@ def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path):
         assert errors.collect() == []
         return updated
 
-    assert 0 < len(_job_ids(spark, "test-classify-jobs", classify)) <= 2
+    assert 0 < len(job_ids("test-classify-jobs", classify)) <= 2
 
     def layer_info():
         _, errors = update_layer_info(cat, "slope", title="Slope (deg)")
         assert errors.collect() == []
 
-    assert 0 < len(_job_ids(spark, "test-layer-info-jobs", layer_info)) <= 1
+    assert 0 < len(job_ids("test-layer-info-jobs", layer_info)) <= 1
     # the answers are those of the keyed edits, not of the job counting
     row = classify().filter("Name = 'elev'").first()
     assert row["InputRanges"] == "0.0,50.0,50.0,101.0"
     assert row["OutputValues"] == "2,8"
+
+
+_RANGES = "label string, lo double, hi double, out int"
+_CATALOG = (
+    "Name string, Title string, InputRanges string, OutputValues string,"
+    " RangeLabels string"
+)
+
+
+@pytest.mark.parametrize(
+    "rows, stats",
+    [
+        # a null first lo, compared with the dataset min
+        ([("low", None, 50.0, 2), ("high", 50.0, 101.0, 8)], (0.0, 100.0)),
+        # a null last hi, compared with the dataset max
+        ([("low", 0.0, 50.0, 2), ("high", 50.0, None, 8)], (0.0, 100.0)),
+        # a null out, checked against the suitability domain
+        ([("low", 0.0, 50.0, None), ("high", 50.0, 101.0, 8)], None),
+    ],
+    ids=["null_first_lo", "null_last_hi", "null_out"],
+)
+def test_null_bound_is_an_invalid_range_error(spark, job_ids, rows, stats):
+    """A null bound or output is rejected with an invalid_range error row
+    and the catalog comes back unchanged. The check loops over the
+    collected rows: on local frames the whole rejection runs no job."""
+    catalog = local_frame(spark, [("elev", "Elevation")], _CATALOG)
+    ranges = local_frame(spark, rows, _RANGES)
+    stats_df = None if stats is None else local_frame(
+        spark, [stats], "mn double, mx double"
+    )
+    out = {}
+
+    def edit():
+        out["updated"], errors = update_classification(
+            catalog, "elev", ranges, stats_df
+        )
+        out["errors"] = [(r["severity"], r["code"]) for r in errors.collect()]
+
+    assert job_ids("test-null-bound", edit) == []
+    assert out["updated"] is catalog
+    assert out["errors"] == [("error", "invalid_range")]
 
 
 def _lo_key(v):
@@ -500,13 +528,9 @@ def _value_tables(draw):
 
 
 def _outcome(fn):
-    """Errors as (severity, code, message), or the exception an invalid
-    value table raises (a null bound fails driver-side comparisons)."""
-    try:
-        _, errors = fn()
-        return sorted(tuple(r) for r in errors.collect())
-    except TypeError as e:
-        return ("raised", str(e))
+    """Errors as (severity, code, message)."""
+    _, errors = fn()
+    return sorted(tuple(r) for r in errors.collect())
 
 
 @settings(
@@ -520,16 +544,13 @@ def test_driver_range_sort_matches_spark_order_by(spark, monkeypatch, table):
     order (nulls first, NaN after every number), so update_classification
     gives the errors the Spark-sorted value table gave."""
     rows, stats = table
-    ranges = local_frame(spark, rows, "label string, lo double, hi double, out int")
+    ranges = local_frame(spark, rows, _RANGES)
     spark_order = ranges.orderBy("lo").collect()
     assert [r["label"] for r in toolbox._sort_ranges(ranges.collect())] == [
         r["label"] for r in spark_order
     ]
 
-    catalog = local_frame(
-        spark, [("elev", "Elevation")], "Name string, Title string, "
-        "InputRanges string, OutputValues string, RangeLabels string",
-    )
+    catalog = local_frame(spark, [("elev", "Elevation")], _CATALOG)
     stats_df = None if stats is None else local_frame(
         spark, [stats], "mn double, mx double"
     )

@@ -5,30 +5,62 @@ thresholded similarity join) must be merged into CLUSTERS so one canonical
 document per cluster survives. Pairs alone over-delete (A~B, B~C but A!~C
 still means keep only one of {A,B,C}).
 
-No anchor in the reference (it has no text pipeline). Algorithm is
-min-label propagation with pointer jumping -- the public "hash-to-min" /
-alternating-star family (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14):
+No anchor in the reference (it has no text pipeline). The operator picks
+one of two paths by the size of the edge list:
 
-- each node starts labeled with itself;
-- each round takes the min label over {self} + neighbors (one shuffle
-  keyed by node), then POINTER-JUMPS: label <- label(label) (a second
-  keyed shuffle). Jumping collapses chains exponentially, so rounds are
-  O(log diameter), not O(diameter);
-- labels only ever decrease, so a monotone checksum (SUM of labels)
-  detects convergence with one tiny action per round;
-- ``localCheckpoint`` truncates lineage each round -- without it the plan
-  doubles per iteration and the driver OOMs long before the data does.
+- **Driver union-find** (at most ``driver_max_edges`` edges, the common
+  case: candidate graphs from a near-dup pass are metadata-sized). One
+  bounded job collects the edges as Arrow; union-find on the driver
+  always keeps the smaller root, so each root is its set's minimum; the
+  labels come back as a LocalRelation, which runs no job of its own.
+- **Distributed rounds** (larger graphs): alternating large-star and
+  small-star rounds (Kiveris et al., "Connected Components in MapReduce
+  and Beyond", SoCC'14). Each round rewrites every edge toward a smaller
+  endpoint with window minima keyed by node; O(log^2 n) rounds at worst,
+  a handful in practice, until the edge set stops changing. Then every
+  component is a star around its minimum.
 
-Scale: every round is two shuffles keyed by node id over the EDGE list
-(never node x node); state is one row per node. At 100 TB the edge list
-from banded LSH is linear-ish in corpus size, so rounds stay linear.
+  - Why not min-label propagation with pointer jumping: it is not
+    O(log diameter) when a component's minimum sits away from the low-id
+    end of a long chain (a 60-hop chain with its minimum at the high end
+    does not converge in 25 rounds), and its per-round joins multiply
+    the planner's size estimates until planning stalls after about ten
+    rounds.
+  - ``localCheckpoint`` truncates lineage each round -- without it the
+    plan doubles per iteration and the driver OOMs long before the data
+    does. A full-outer join of two rounds' edge sets checks convergence
+    exactly, one action per round.
+
+  Every round pays a fixed toll of several Spark jobs, whatever the data
+  size; that toll is why small graphs take the driver path.
+
+Both paths read one persisted copy of the edge list, so the (usually
+expensive) upstream similarity join is computed once either way.
+
+Scale: every round is a few shuffles keyed by node id over the EDGE list
+(never node x node). At 100 TB the edge list from banded LSH is
+linear-ish in corpus size, so rounds stay linear.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..session import local_frame
+
+#: Default largest edge list clustered on the driver: a size cut with a
+#: documented default, like ``autoBroadcastJoinThreshold``. Measured on 4
+#: cores (``local[4]``, pyspark 4.1.2, sparse random graphs, CC plus one
+#: aggregation over its output), the driver path beat the rounds at every
+#: size tried: 10k edges 0.6 vs 6.2 s, 100k 1.4 vs 10.4 s, 300k 2.9 vs
+#: 19.4 s. The cut therefore bounds driver-side cost, not a crossover: at
+#: 1M edges union-find plus the label table take 5.4 s of driver CPU, the
+#: LocalRelation costs each consumer ~3.8 s, and a graph past the cut
+#: still pays the size check's collect of up to T + 1 rows a partition.
+DRIVER_MAX_EDGES = 100_000
 
 
 def connected_components(
@@ -37,136 +69,162 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     num_partitions: int | None = None,
+    *,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Return ``(node, component)`` where component = MIN node id reachable.
 
     ``edges`` is an undirected pair list (each pair once, either order).
     Every endpoint appears in the output; isolated nodes are the caller's
-    concern (left-join the node universe and ``coalesce`` to self).
+    concern (left-join the node universe and ``coalesce`` to self). A
+    null endpoint joins no component: the other endpoint is still a node,
+    and any null endpoint adds one ``(null, null)`` row.
 
-    ``num_partitions``: partition count for the per-round checkpointed
-    state (``repartition(n, "node")`` on the edge list and label frames --
+    ``driver_max_edges``: edge lists with at most this many rows are
+    clustered by union-find on the driver; larger ones run the
+    distributed rounds. ``0`` forces the rounds. The edge list is
+    persisted, and one job collects at most ``driver_max_edges + 1``
+    edges to decide, so the upstream plan runs once on either path.
+
+    ``num_partitions`` (rounds only): partition count for the per-round
+    checkpointed edge state (``repartition(n, "src")``, the window key --
     NOT a session-conf write, so concurrent queries on the same session
-    are unaffected). Each round is several tiny jobs whose cost is
-    dominated by task-scheduling overhead when the edge list is
-    metadata-sized (a bounded probe set); callers with such inputs pass a
-    small value to bound map-task counts, and AQE coalescing sizes the
-    reducer side. Leave ``None`` for data-sized graphs.
+    are unaffected). Each round is several jobs whose cost is dominated
+    by task-scheduling overhead when the edge list is small; a caller
+    that forces the rounds on such input can pass a small value to bound
+    map-task counts, and AQE coalescing sizes the reducer side. Leave
+    ``None`` for data-sized graphs.
+
+    ``max_iter`` (rounds only) caps the rounds; a graph that has not
+    converged by then raises ``RuntimeError`` instead of returning
+    partial labels.
     """
-    return _run_rounds(edges, src, dst, max_iter, num_partitions)
+    if not 0 <= driver_max_edges < 2**31 - 1:
+        raise ValueError(
+            f"driver_max_edges={driver_max_edges} must be in [0, 2**31 - 2]"
+        )
+    pairs = edges.select(
+        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # one job: a bounded collect, each task taking at most T + 1 rows
+        # (toArrow, not collect(): collect()'s incremental take would run
+        # a job per growing batch of partitions). It fills the cache.
+        head = pairs.limit(driver_max_edges + 1).toArrow()
+        if head.num_rows <= driver_max_edges:
+            return _union_find(edges.sparkSession, head)
+        return _run_rounds(pairs, max_iter, num_partitions)
+    finally:
+        pairs.unpersist()
+
+
+def _union_find(spark: SparkSession, pairs: pa.Table) -> DataFrame:
+    """Components of a collected ``(src, dst)`` table, matching the rounds
+    exactly: component = min node reachable, null endpoints join nothing
+    and yield one ``(null, null)`` row."""
+    parent: dict[int, int] = {}
+    has_null = False
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(pairs.column("src").to_pylist(), pairs.column("dst").to_pylist()):
+        if a is None or b is None:
+            has_null = True
+            for n in (a, b):
+                if n is not None:
+                    parent.setdefault(n, n)
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        # keep the smaller root, so every root is its set's minimum
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    nodes = list(parent)
+    comps = [find(n) for n in nodes]
+    if has_null:
+        nodes.append(None)
+        comps.append(None)
+    table = pa.table(
+        {"node": pa.array(nodes, pa.int64()), "component": pa.array(comps, pa.int64())}
+    )
+    return local_frame(spark, table, "node long, component long")
 
 
 def _run_rounds(
-    edges: DataFrame,
-    src: str,
-    dst: str,
+    pairs: DataFrame,
     max_iter: int,
     num_partitions: int | None,
 ) -> DataFrame:
-    def _sized(df: DataFrame) -> DataFrame:
-        # hash-distribute the loop state by node so every round's map side
-        # has a bounded task count; a no-op passthrough when unset.
-        return df.repartition(num_partitions, "node") if num_partitions else df
+    """Alternating large-star / small-star rounds over the edge list
+    (Kiveris et al., SoCC'14). Every round rewrites each edge toward a
+    smaller endpoint with window minima keyed by node -- no node x node
+    join -- until the edge set stops changing; every component is then a
+    star around its minimum, and a node's component is the least of
+    itself and its neighbours."""
+    by_src = Window.partitionBy("src")
 
-    # pin once: the edge list re-evaluates EVERY round otherwise (it is
-    # usually an expensive similarity join upstream). r15 (guide section
-    # 2.4 "remove shuffles outright"): the pin is now a PERSIST of the
-    # edge list hash-partitioned by the per-round join key ``nbr`` --
-    # r14's localCheckpoint ERASED the partitioning (an RDD-scan leaf
-    # reports unknown outputPartitioning), so every round's nbr_min join
-    # re-shuffled the whole EDGE LIST by nbr; an InMemoryTableScan keeps
-    # its child's HashPartitioning visible, so the per-round join now
-    # shuffles only the node-sized label vector. One up-front exchange
-    # (which round 1 used to pay anyway) buys rounds x (edge-list
-    # exchange) -- the dominant per-round cost on data-sized graphs.
-    # MEMORY_AND_DISK: blocks spill instead of failing, and lineage is
-    # KEPT so a lost block recomputes (the pin_corpus 'disk' rationale);
-    # unpersisted before return.
-    n_part = num_partitions or int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    from pyspark import StorageLevel
+    def sym(df: DataFrame) -> DataFrame:
+        # both directions, no self-loops, one row per edge; sized by the
+        # window key when the caller bounds the state's partition count
+        both = df.union(df.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        both = both.filter(F.col("src") != F.col("dst")).distinct()
+        return both.repartition(num_partitions, "src") if num_partitions else both
 
-    sym = (
-        edges.select(
-            F.col(src).cast("long").alias("node"), F.col(dst).cast("long").alias("nbr")
+    def large_star(e: DataFrame) -> DataFrame:
+        # every neighbour above u links to the least of u and its neighbours
+        m = F.least("src", F.min("dst").over(by_src))
+        return sym(
+            e.withColumn("m", m)
+            .filter(F.col("dst") > F.col("src"))
+            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        .union(
-            edges.select(
-                F.col(dst).cast("long").alias("node"),
-                F.col(src).cast("long").alias("nbr"),
+
+    def small_star(e: DataFrame) -> DataFrame:
+        # u and its neighbours below u link to the least of them
+        lo = e.filter(F.col("dst") < F.col("src")).withColumn(
+            "m", F.least("src", F.min("dst").over(by_src))
+        )
+        return sym(
+            lo.select(F.col("dst").alias("src"), F.col("m").alias("dst")).union(
+                lo.select("src", F.col("m").alias("dst"))
             )
         )
-        .repartition(n_part, "nbr")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # r15 (ADVICE r14): the INITIAL labels pin is EAGER. Lazy, it was
-    # first materialized by round 1's eager 'stepped' job, which
-    # references labels on BOTH sides (directly and via nbr_min) -- the
-    # same concurrent-double-compute race the 'stepped' pin below
-    # documents, here on the distinct-node scan. One extra tiny blocking
-    # job per CC call (not per round); it also populates the persisted
-    # 'sym' cache as a side effect (single evaluation there, no race).
-    labels = _sized(
-        sym.select("node")
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-    ).localCheckpoint(eager=True)
-    prev_sum = None
+
+    # the symmetric edge list is an eager pin: each round reads the
+    # previous one twice (the rewrite and the convergence check)
+    edges = sym(pairs.filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
+    edges = edges.localCheckpoint(eager=True)
     for _ in range(max_iter):
-        # min over neighbors' labels (one shuffle keyed by node)
-        nbr_min = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("nbr"), F.col("component").alias("nbr_comp")
-                ),
-                "nbr",
-            )
-            .groupBy("node")
-            .agg(F.min("nbr_comp").alias("nbr_comp"))
+        nxt = small_star(large_star(edges)).localCheckpoint(eager=True)
+        changed = (
+            nxt.withColumn("_n", F.lit(1))
+            .join(edges.withColumn("_e", F.lit(1)), ["src", "dst"], "full_outer")
+            .filter(F.col("_n").isNull() | F.col("_e").isNull())
         )
-        # r14: pin stepped before the pointer-jump SELF-join. Unpinned,
-        # both join sides re-evaluated the whole stepped subtree --
-        # including nbr_min's join+agg -- so every round paid that work
-        # twice. This one pin stays EAGER: a lazy pin consumed by both
-        # sides of the same self-join job materialized racily in the r14
-        # A/B (both branches computing it concurrently -- 23s spikes on
-        # q_semantic_clusters); the eager job guarantees exactly one
-        # computation of the nbr_min join+agg per round.
-        stepped = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least("component", F.coalesce("nbr_comp", "component")).alias(
-                    "component"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # pointer jump: component <- label(component). component is always an
-        # existing node id, so the inner-ish left join always hits.
-        jumped = (
-            stepped.alias("l")
-            .join(
-                stepped.select(
-                    F.col("node").alias("p_node"), F.col("component").alias("p_comp")
-                ).alias("r"),
-                F.col("l.component") == F.col("p_node"),
-                "left",
-            )
-            .select(
-                "node",
-                F.least("component", F.coalesce("p_comp", "component")).alias(
-                    "component"
-                ),
-            )
-        )
-        labels = _sized(jumped).localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
+        done = changed.isEmpty()
+        edges = nxt
+        if done:
             break
-        prev_sum = cur_sum
-    # the returned labels are a materialized checkpoint (the convergence
-    # sum above ran them); the edge cache is no longer referenced.
-    sym.unpersist()
-    return labels
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in max_iter={max_iter} rounds"
+        )
+    # every endpoint is a node (a null one included: it joins nothing and
+    # keeps a null label); the result is pinned, because the caller
+    # releases the edge cache it was computed from
+    nodes = pairs.select(F.col("src").alias("node")).union(
+        pairs.select(F.col("dst").alias("node"))
+    ).distinct()
+    nearest = edges.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("nbr"))
+    return (
+        nodes.join(nearest, "node", "left")
+        .select("node", F.least("node", F.coalesce("nbr", "node")).alias("component"))
+        .localCheckpoint(eager=True)
+    )

@@ -294,9 +294,9 @@ def phash_components(
     ``radius`` bands, so with ``bands > radius`` at least one band
     matches exactly -- LOSSLESS recall by pigeonhole (deterministic,
     unlike MinHash banding), then ``bit_count(xor) <= radius`` gates
-    exactly. Components via min-label pointer jumping
-    (operators/graph.py), O(log diameter) rounds over the hash-edge
-    list."""
+    exactly. Components via operators/graph.py: union-find on the
+    driver for a hash-edge list under its threshold, else large-star /
+    small-star rounds (``num_partitions`` sizes their state)."""
     if bands <= radius:
         raise ValueError(
             f"bands={bands} must exceed radius={radius} for lossless banding"

@@ -14,9 +14,11 @@ rules, fingerprint dedup, MinHash clustering, per-domain caps).
 Scale posture: every stage is a declarative DataFrame transform, but not
 all of the work waits for the caller's first action.
 
-- At call time: near-dup clustering (opt-in) runs its connected-component
-  rounds eagerly, collecting one convergence sum to the driver per round
-  (operators/graph.py). The cascade ends in one pinned ``(id, reason)``
+- At call time: near-dup clustering (opt-in) persists the candidate
+  edges and collects them in one bounded job; a metadata-sized graph is
+  clustered by union-find on the driver, a larger one by distributed
+  rounds that run eagerly (operators/graph.py). The cascade ends in one
+  pinned ``(id, reason)``
   verdict (plans/pinning.py ``pin_corpus``); in the default
   ``checkpoint`` mode, building the pin runs the cascade's shuffle stages.
 - At materialization: the pin's final stage, then ``kept`` (a semi-join of
@@ -25,9 +27,10 @@ all of the work waits for the caller's first action.
   materializing all three runs the cascade once, not once per output.
 
 Stage costs: quality/fingerprint are narrow + one hash shuffle; near-dup
-clustering adds the banded-LSH join and the component rounds; the domain
-cap is one window shuffle keyed by source. Only the convergence sums and
-whatever the caller collects reach the driver.
+clustering adds the banded-LSH join and the components; the domain cap
+is one window shuffle keyed by source. Only the candidate edges (up to
+the components' driver threshold) and whatever the caller collects reach
+the driver.
 """
 
 from __future__ import annotations

@@ -30,9 +30,12 @@ its result is first read.
   storage at all and the source scan is cheaper than materialization.
 
 Use ``.transform(pin_corpus)`` in call chains. NOT for iteration-state
-checkpoints (pagerank / kmeans / connected components): those exist to
-TRUNCATE LINEAGE across loop rounds -- ``none`` would let the plan grow
-exponentially -- so they stay explicit ``localCheckpoint`` calls.
+checkpoints (pagerank / kmeans / the connected-components rounds): those
+exist to TRUNCATE LINEAGE across loop rounds -- ``none`` would let the
+plan grow exponentially -- so they stay explicit ``localCheckpoint``
+calls. Every such checkpoint is a job per round, whatever the data size;
+connected components therefore runs its rounds only for edge lists too
+large for the driver, and clusters smaller ones with union-find there.
 """
 
 from __future__ import annotations

@@ -397,9 +397,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle keys by (band_idx, band_hash) and the quadratic pair
     space never materializes -- pinned in tests/test_plans.py), exact
     Jaccard runs ONLY on the candidate pairs as per-pair array-intersect
-    JVM exprs, and clustering is min-label propagation with pointer
-    jumping -- O(log diameter) rounds of two node-keyed shuffles, state
-    one row per node (operators/graph.py). Recall: 8 bands of 2 means a
+    JVM exprs, and clustering is size-adaptive (operators/graph.py):
+    union-find on the driver for an edge list under its threshold,
+    otherwise large-star / small-star rounds of node-keyed shuffles over
+    the edge list. Recall: 8 bands of 2 means a
     j=0.9 pair is missed only if all 8 band slices disagree, p ~
     (1-0.81)^8 ~ 2e-6; the exact-verify step makes precision 1.0, and
     tests/test_llm_ops.py asserts candidates cover every j>=0.9 pair on
@@ -411,15 +412,17 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the CC rounds) -- floor=None 3.69s, floor=0.25 3.82s, floor=0.45
     # 3.50s: within run noise, because fixture docs are short enough that
     # exact array_intersect verify costs less than materializing
-    # est_jaccard per collision row, and the wall clock is dominated by
-    # per-round job overhead in the pointer-jumping loop. Long-document
-    # corpora flip that trade -- the knob stays on the operator.
+    # est_jaccard per collision row, and the wall clock was dominated by
+    # per-round job overhead in the components' distributed rounds (they
+    # now run on the driver at this size). Long-document corpora flip
+    # that trade -- the knob stays on the operator.
     edges = minhash_verified_edges(
         d, "doc_id", F.array_distinct(TOKS()), threshold=0.9, k=16, bands=8
     )
     # bounded probe set (doc_id<500): the edge list is metadata-sized, so
-    # run the rounds on few partitions -- per-task overhead, not data,
-    # dominates. An unbounded corpus caller leaves the default.
+    # it clusters on the driver; should it ever exceed the driver
+    # threshold, the rounds run on few partitions -- per-task overhead,
+    # not data, dominates. An unbounded corpus caller leaves the default.
     comp = connected_components(edges, "src", "dst", num_partitions=8)
     return d.select(F.col("doc_id").cast("long").alias("doc_id")).join(
         comp, F.col("doc_id") == F.col("node"), "left"
@@ -1405,8 +1408,8 @@ def q_multimodal_phash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty-not-volume law as the streaming dedup index). Banded
     equi-join (4 bands x 4 bits, lossless at radius <= 3 by pigeonhole)
     proposes hash pairs, bit_count(xor) <= 3 gates them exactly, and
-    min-label pointer-jumping (operators/graph.py) merges transitive
-    families in O(log diameter) rounds over the hash-edge list. The
+    connected components (operators/graph.py) merge transitive
+    families over the hash-edge list. The
     doc_id<300 bound the pair-LISTING row needs is gone precisely
     because no doc-level pair is ever materialized: the fixture's
     ham<=3 density (49 percent of all doc pairs at sf0.1) costs nothing
@@ -1442,7 +1445,8 @@ def q_multimodal_phash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # hash-universe CC: edge list is <= |hashes| x 697 (radius-3 ball of
-    # a 16-bit hash), metadata-sized -- bound the per-round task count.
+    # a 16-bit hash), metadata-sized -- driver union-find below the
+    # threshold; above it, bound the per-round task count.
     comp = phash_components(
         hgroups, bits=16, radius=3, bands=4, num_partitions=8
     ).withColumnRenamed("phash", "c_phash")
@@ -3477,7 +3481,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition); the bucket is the portable md5-60 mod 100 integer.
 
     Scale: clustering is the q_dedup_clusters plan (banded LSH ->
-    exact verify -> pointer-jumping CC); the representative lookup is
+    exact verify -> connected components); the representative lookup is
     one join from the component label back to the corpus (component IS
     a doc_id), the bucket a per-row expression, and the member
     assignment one more component-keyed join. Writing the actual splits
@@ -5383,22 +5387,23 @@ def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank on sequential-fold sims); component labels are pure min-label
     reachability -- integers only. The oracle is the recursive-CTE
     transitive closure over the same SQL-rebuilt edges, tractable
-    because the fixture's mutual graph is sparse; the Spark side runs
-    pointer-jumping min-label propagation (operators/graph.py) --
-    O(log diameter) rounds of node-keyed shuffles, never materializing
-    reachability.
+    because the fixture's mutual graph is sparse; the Spark side never
+    materializes reachability (operators/graph.py): union-find on the
+    driver for an edge list under its threshold, else large-star /
+    small-star rounds of node-keyed shuffles.
 
     Scale: edge construction is the q_knn_graph plan (one pinned
     embeddings scan, bucket-keyed pair space, rank-in-place); components
     are the q_dedup_clusters machinery with per-node state; the node
     universe joins back from the SAME pinned relation -- no second
     embeddings scan (plan-audited). Bounded probe block (vec_id < 500,
-    the q_dedup_clusters convention): the min-label rounds cost
-    O(log diameter) JOBS regardless of data size, and the fixture's
-    mutual 3-NN graph is chain-like (~10 pointer-jump rounds at 2000
-    nodes), so the unbounded form is pure scheduling overhead at test
-    scale while the plan is identical; an unbounded caller uses the
-    operator directly with data-sized num_partitions."""
+    the q_dedup_clusters convention): it keeps the DuckDB oracle's
+    recursive closure tractable, and the edge list (at most 3 per
+    vector) stays far under the components' driver threshold, so the
+    clustering is one bounded collect plus driver union-find. An
+    unbounded caller uses the operator directly; past the threshold
+    every round costs several JOBS regardless of data size, so pass a
+    data-sized num_partitions."""
     # n_planes=4 pinned for the oracle's inlined plane literals (same
     # registry convention as q_knn_graph; production default is auto).
     edges, nodes = _mutual_knn_edges(spark, sf_dir, max_vec_id=500, n_planes=4)

@@ -73,19 +73,25 @@ def get_spark(app_name: str = "wros-spark", cpus: int | None = None) -> SparkSes
 
 
 def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: StructType | str
+    spark: SparkSession, rows: list[tuple] | pa.Table, schema: StructType | str
 ) -> DataFrame:
-    """A driver-built table of a few rows as a LocalRelation.
+    """A driver-built table as a LocalRelation.
 
     ``spark.createDataFrame(list)`` parallelizes the rows into a Python
     RDD, so every action on the frame runs Python-worker tasks (about
     0.3 s a job on 4 cores, even for an empty list). A ``pyarrow.Table``
     input becomes a LocalRelation instead, which collects without a job.
     ``schema`` is a StructType or a DDL string; the arrow input carries
-    its types, since the arrow path ignores a DDL schema."""
+    its types, since the arrow path ignores a DDL schema. ``rows`` is a
+    list of tuples, or a ``pyarrow.Table`` already in column form (cast
+    to ``schema``) for frames too large to build row by row."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        table = rows.cast(arrow_schema)
+    else:
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+        )
     return spark.createDataFrame(table, schema)

@@ -483,6 +483,8 @@ def update_classification(
 
     Validations (mirrors ``updateMessages``/``execute``):
     - required columns present (R10, ``.pyt:139-147``);
+    - no null ``lo``, ``hi`` or ``out`` (``invalid_range``): a null has
+      no range to write or compare;
     - suitability domain 0-9 (``.pyt:86-87``);
     - range contiguity (R25, ``.pyt:199-217``);
     - coverage vs stats (R26, ``.pyt:281-314``): the first range min is
@@ -534,6 +536,14 @@ def update_classification(
     # (contiguity_errors stays the declared distributed R25 operator for
     # data-sized range tables; q_wro_contiguity exercises it.)
     rows = _sort_ranges(ranges_df.collect())
+    # a null bound or output has no range to write or compare: reject the
+    # table before any check that orders or renders its values
+    nulls = sum(1 for r in rows if None in (r["lo"], r["hi"], r["out"]))
+    if nulls:
+        return catalog_df, _err(
+            spark,
+            [("error", "invalid_range", f"{nulls} ranges with a null lo, hi or out")],
+        )
     bad_out = sum(1 for r in rows if r["out"] < 0 or r["out"] > 9)
     if bad_out:
         errs.append(
@@ -557,7 +567,7 @@ def update_classification(
                     label=rows[0]["label"], lo=float(st["mn"]),
                     hi=rows[0]["hi"], out=rows[0]["out"],
                 )
-            elif rows[-1]["hi"] <= st["mx"]:
+            elif st["mx"] is not None and rows[-1]["hi"] <= st["mx"]:
                 # strict-max error; elif-skipped when the min snapped,
                 # mirroring the reference (.pyt:312-314)
                 errs.append(
