@@ -8,7 +8,7 @@ still means keep only one of {A,B,C}).
 No anchor in the reference (it has no text pipeline). The operator picks
 one of two paths by the size of the edge list:
 
-- **Driver union-find** (at most ``driver_max_edges`` edges, the common
+- **Driver union-find** (at most ``DRIVER_MAX_EDGES`` edges, the common
   case: candidate graphs from a near-dup pass are metadata-sized). One
   bounded job collects the edges as Arrow; union-find on the driver
   always keeps the smaller root, so each root is its set's minimum; the
@@ -17,8 +17,11 @@ one of two paths by the size of the edge list:
   small-star rounds (Kiveris et al., "Connected Components in MapReduce
   and Beyond", SoCC'14). Each round rewrites every edge toward a smaller
   endpoint with window minima keyed by node; O(log^2 n) rounds at worst,
-  a handful in practice, until the edge set stops changing. Then every
-  component is a star around its minimum.
+  until the edge set stops changing. Then every component is a star
+  around its minimum. Measured: 3 to 5 rounds on the sf1r candidate
+  graphs, 7 on sparse random graphs of 1M and 3M edges, and 22 on a
+  1M-hop chain whose minimum hangs off the far end, which is why the
+  round cap grows with the graph instead of staying a fixed 25.
 
   - Why not min-label propagation with pointer jumping: it is not
     O(log diameter) when a component's minimum sits away from the low-id
@@ -44,33 +47,36 @@ linear-ish in corpus size, so rounds stay linear.
 
 from __future__ import annotations
 
+import math
+
 import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
 
-#: Default largest edge list clustered on the driver: a size cut with a
-#: documented default, like ``autoBroadcastJoinThreshold``. Measured on 4
-#: cores (``local[4]``, pyspark 4.1.2, sparse random graphs, CC plus one
-#: aggregation over its output), the driver path beat the rounds at every
-#: size tried: 10k edges 0.6 vs 6.2 s, 100k 1.4 vs 10.4 s, 300k 2.9 vs
-#: 19.4 s. The cut therefore bounds driver-side cost, not a crossover: at
-#: 1M edges union-find plus the label table take 5.4 s of driver CPU, the
-#: LocalRelation costs each consumer ~3.8 s, and a graph past the cut
-#: still pays the size check's collect of up to T + 1 rows a partition.
-DRIVER_MAX_EDGES = 100_000
+#: Largest edge list clustered on the driver. This is a driver-memory
+#: bound, not a time crossover: on 4 cores (``local[4]``, pyspark 4.1.2,
+#: sparse random graphs, CC plus one aggregation over its output) the
+#: driver path beat the rounds at every size measured -- 100k edges 1.4
+#: vs 10.4 s, 1M 7.7 vs 53.4 s, 3M 23.5 vs 150.7 s. It costs the driver
+#: about 200 MB of Python objects and 200 MB of JVM heap per million
+#: edges (the union-find and the LocalRelation of labels); the cut keeps
+#: that near 0.4 GB, under half of Spark's default 1 GB driver. A graph
+#: past the cut also pays the size check's collect of T + 1 edges. No
+#: benchmark workload has a graph past the cut (the largest measured is
+#: the sf1r phash candidate graph, 1.35M edges), so the rounds-side
+#: traffic is unverified by the benchmark and covered by tests only.
+DRIVER_MAX_EDGES = 1_000_000
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
+    max_iter: int | None = None,
     num_partitions: int | None = None,
-    *,
-    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Return ``(node, component)`` where component = MIN node id reachable.
 
@@ -80,11 +86,11 @@ def connected_components(
     null endpoint joins no component: the other endpoint is still a node,
     and any null endpoint adds one ``(null, null)`` row.
 
-    ``driver_max_edges``: edge lists with at most this many rows are
-    clustered by union-find on the driver; larger ones run the
-    distributed rounds. ``0`` forces the rounds. The edge list is
-    persisted, and one job collects at most ``driver_max_edges + 1``
-    edges to decide, so the upstream plan runs once on either path.
+    Edge lists of at most ``DRIVER_MAX_EDGES`` rows are clustered by
+    union-find on the driver; larger ones run the distributed rounds.
+    The edge list is persisted, and one job collects at most
+    ``DRIVER_MAX_EDGES + 1`` edges to decide, so the upstream plan runs
+    once on either path.
 
     ``num_partitions`` (rounds only): partition count for the per-round
     checkpointed edge state (``repartition(n, "src")``, the window key --
@@ -97,12 +103,11 @@ def connected_components(
 
     ``max_iter`` (rounds only) caps the rounds; a graph that has not
     converged by then raises ``RuntimeError`` instead of returning
-    partial labels.
+    partial labels. ``None`` derives the cap from the size of the graph,
+    ``2 * ceil(log2(m + 2)) ** 2`` for ``m`` directed edges (never fewer
+    than the nodes on an edge), since the star rounds converge in
+    O(log^2 n) rounds.
     """
-    if not 0 <= driver_max_edges < 2**31 - 1:
-        raise ValueError(
-            f"driver_max_edges={driver_max_edges} must be in [0, 2**31 - 2]"
-        )
     pairs = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -110,8 +115,8 @@ def connected_components(
         # one job: a bounded collect, each task taking at most T + 1 rows
         # (toArrow, not collect(): collect()'s incremental take would run
         # a job per growing batch of partitions). It fills the cache.
-        head = pairs.limit(driver_max_edges + 1).toArrow()
-        if head.num_rows <= driver_max_edges:
+        head = pairs.limit(DRIVER_MAX_EDGES + 1).toArrow()
+        if head.num_rows <= DRIVER_MAX_EDGES:
             return _union_find(edges.sparkSession, head)
         return _run_rounds(pairs, max_iter, num_partitions)
     finally:
@@ -159,7 +164,7 @@ def _union_find(spark: SparkSession, pairs: pa.Table) -> DataFrame:
 
 def _run_rounds(
     pairs: DataFrame,
-    max_iter: int,
+    max_iter: int | None,
     num_partitions: int | None,
 ) -> DataFrame:
     """Alternating large-star / small-star rounds over the edge list
@@ -198,9 +203,15 @@ def _run_rounds(
         )
 
     # the symmetric edge list is an eager pin: each round reads the
-    # previous one twice (the rewrite and the convergence check)
+    # previous one twice (the rewrite and the convergence check); the pin
+    # also counts it, with no job of its own, to size the round cap
+    size = Observation()
     edges = sym(pairs.filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
-    edges = edges.localCheckpoint(eager=True)
+    edges = edges.observe(size, F.count(F.lit(1)).alias("m")).localCheckpoint(
+        eager=True
+    )
+    if max_iter is None:
+        max_iter = 2 * math.ceil(math.log2(size.get["m"] + 2)) ** 2
     for _ in range(max_iter):
         nxt = small_star(large_star(edges)).localCheckpoint(eager=True)
         changed = (

@@ -1445,7 +1445,8 @@ def q_multimodal_phash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # hash-universe CC: edge list is <= |hashes| x 697 (radius-3 ball of
-    # a 16-bit hash), metadata-sized -- driver union-find below the
+    # a 16-bit hash) -- 1.35M edges at sf1r, past the driver threshold,
+    # so it is not metadata-sized. Driver union-find below the
     # threshold; above it, bound the per-round task count.
     comp = phash_components(
         hgroups, bits=16, radius=3, bands=4, num_partitions=8
