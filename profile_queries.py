@@ -1,12 +1,12 @@
-"""Round-14 optimization profiler: per-query explain capture + isolated
-timing for the bench headline set.
+"""Query profiler: per-query explain capture + isolated timing for the
+bench headline set.
 
 Usage:
-    python profile_r15.py explains [names...]   # write plans/r15/<q>_{when}.txt
-    python profile_r15.py time <name> [reps]    # isolated min-of-N noop timing
-    python profile_r15.py jobs <name>           # per-job wall breakdown (one rep)
+    python profile_queries.py explains [names...]   # write plans/profile/<q>_{when}.txt
+    python profile_queries.py time <name> [reps]    # isolated min-of-N noop timing
+    python profile_queries.py jobs <name>           # per-job wall breakdown (one rep)
 
-Explains go to plans/r15/<query>_before.txt on the first capture and
+Explains go to plans/profile/<query>_before.txt on the first capture and
 _after.txt when SPARK_GRAFT_PLAN_WHEN=after. Timing uses the bench's
 methodology (noop sink, warm session, min over reps) so numbers are
 comparable with bench.py rows.
@@ -20,13 +20,13 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WHEN = os.environ.get("SPARK_GRAFT_PLAN_WHEN", "before")
-OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r15")
+OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "profile")
 
 
 def get_session():
     from weighted_raster_overlay_service_toolbox_spark.session import get_spark
 
-    return get_spark("wros-r15-profile")
+    return get_spark("wros-profile")
 
 
 def stage_streams(spark, names):

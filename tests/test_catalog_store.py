@@ -277,3 +277,40 @@ def test_catalog_diff_emits_only_changed_keys(spark):
     assert diff == {"a": ("update", "TA2"), "c": ("delete", None)}
     # identical snapshots diff to empty
     assert catalog_diff(spark, store, v_from=None, v_to=None).count() == 0
+
+
+def test_load_catalog_runs_no_job(spark, tmp_path, job_ids):
+    """The footer schema is read on the driver: loading a catalog runs no
+    Spark job before the caller's first action (schema inference ran
+    one per call), live or versioned."""
+    path = str(tmp_path / "cat")
+    create_catalog(spark, path)
+    append_rows(
+        spark, path, spark.createDataFrame([("a", "A")], "Name string, Title string")
+    )
+    cat = load_catalog(spark, path)
+    replace_catalog(path, cat.withColumn("Title", F.lit("B")), keep_history=2)
+    assert job_ids("test-load-live", lambda: load_catalog(spark, path)) == []
+    assert job_ids("test-load-v1", lambda: load_catalog(spark, path, version=1)) == []
+    assert [tuple(r) for r in load_catalog(spark, path).select("Name", "Title").collect()] == [("a", "B")]
+    assert load_catalog(spark, path, version=1).select("Title").first()[0] == "A"
+
+
+def test_foreign_catalog_keeps_its_missing_columns(spark, tmp_path):
+    """A catalog this store did not write is read with its own footer
+    schema, so ``missing_columns`` still reports what it lacks."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "foreign"
+    path.mkdir()
+    pq.write_table(
+        pa.table({
+            "Name": ["a"], "RangeLabels": ["lo"], "InputRanges": ["0.0,1.0"],
+            "OutputValues": ["5"],
+        }),
+        str(path / "part-0.parquet"),
+    )
+    cat = load_catalog(spark, str(path))
+    assert missing_columns(cat, REQUIRED_CLASSIFICATION) == ["Title"]
+    assert cat.first()["InputRanges"] == "0.0,1.0"

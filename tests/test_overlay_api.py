@@ -74,3 +74,37 @@ def test_full_lifecycle_create_update_overlay(spark):
         for r in run_overlay(cells, updated, {"elev": 1.0}).collect()
     }
     assert set(after.values()) == {7.0}
+
+
+def test_overlay_quotes_layer_names(spark):
+    """Layer names become SQL string literals: a name with a quote or a
+    backslash scores exactly like the same catalog with plain names."""
+    from weighted_raster_overlay_service_toolbox_spark.plans.wro import CATALOG_SCHEMA
+
+    def catalog(a, b):
+        return spark.createDataFrame(
+            [
+                (a, "A", "0.0,10.0,10.0,20.0", "2,8", "lo,hi", None,
+                 None, None, None, None, None),
+                (b, "B", "0.0,5.0,5.0,20.0", "1,9", "lo,hi", "15.0,16.0",
+                 None, None, None, None, None),
+            ],
+            CATALOG_SCHEMA,
+        )
+
+    def cells(a, b):
+        vals = [(0, 3.0, 15.5), (1, 12.0, 4.0), (2, 9.999, 16.0), (3, 10.0, 5.0)]
+        return spark.createDataFrame(
+            [(a, c, x) for c, x, _ in vals] + [(b, c, y) for c, _, y in vals],
+            "layer string, cell_id long, value double",
+        )
+
+    def scores(a, b):
+        df = run_overlay(cells(a, b), catalog(a, b), {a: 0.75, b: 0.25})
+        return {r["cell_id"]: r["score"] for r in df.collect()}
+
+    odd = scores("O'Neil", "a\\b")
+    assert odd == scores("plain_a", "plain_b")
+    # cell 0 is knocked out by b's NoData range; the rest are scored
+    assert odd == {0: None, 1: 0.75 * 8 + 0.25 * 1, 2: 0.75 * 2 + 0.25 * 9,
+                   3: 0.75 * 8 + 0.25 * 9}

@@ -415,6 +415,22 @@ def test_updates_reject_unknown_name(spark):
     assert errors2.filter("code = 'unknown_name'").count() == 1
 
 
+def test_update_classification_strips_labels_like_the_reference(spark):
+    """Labels are encoded with the reference's ``str(v).strip()``
+    (``.pyt:1308-1323``), which also strips tabs and newlines; Spark's
+    ``trim`` strips spaces only and left a raw newline in the CSV cell."""
+    layers = _layers(spark, [("elev", "Elevation")])
+    cells = _cells(spark, [("elev", 1, 0.0), ("elev", 2, 100.0)])
+    catalog, _ = create_wro_catalog(layers, cells)
+    ranges = spark.createDataFrame(
+        [("\tVery Low", 0.0, 50.0, 2), ("High\n", 50.0, 101.0, 8)],
+        "label string, lo double, hi double, out int",
+    )
+    updated, errors = update_classification(catalog, "elev", ranges)
+    assert errors.collect() == []
+    assert updated.first()["RangeLabels"] == "Very Low,High"
+
+
 def test_error_frames_collect_without_a_job(spark, job_ids):
     """Error frames are local relations: collecting one runs no Spark job,
     with rows or empty (a parallelized Python list ran one job of

@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from weighted_raster_overlay_service_toolbox_spark.functions.ranges import (
     contiguity_errors,
     equal_interval_bounds,
-    in_any_range,
-    remap_case,
+    in_any_range_sql,
+    remap_case_sql,
     unique_value_ranges,
 )
 
@@ -31,7 +31,7 @@ def test_remap_half_open(spark):
     ranges = [(1.0, 11.0, 1), (11.0, 51.0, 9)]
     got = [
         r["out"]
-        for r in df.select(remap_case(F.col("v"), ranges).alias("out"))
+        for r in df.select(F.expr(remap_case_sql("v", ranges)).alias("out"))
         .orderBy("v")
         .collect()
     ]
@@ -91,7 +91,9 @@ def test_in_any_range_nodata(spark):
     df = spark.createDataFrame([(9.999,), (10.0,), (10.999,), (11.0,)], "v double")
     got = [
         r["nd"]
-        for r in df.select(in_any_range(F.col("v"), [(10.0, 11.0)]).alias("nd"))
+        for r in df.select(
+            F.expr(in_any_range_sql("v", [(10.0, 11.0)])).alias("nd")
+        )
         .orderBy("v")
         .collect()
     ]

@@ -11,8 +11,11 @@ Three forms here, all with identical semantics:
   (JVM-side, codegen-friendly; the hot path);
 - :func:`csv_field_sql` / :func:`csv_encode_sql` -- the same logic as ANSI
   SQL for DuckDB oracles;
-- :func:`csv_encode_py` -- a row-at-a-time Python mirror used only to back
-  the declared ``q_udf_scalar`` (UDF-machinery smoke, never the hot path).
+- :func:`csv_encode_py` -- the same encode in Python, for values already
+  on the driver: ``toolbox.update_classification``'s range labels, and
+  the declared ``q_udf_scalar`` (UDF-machinery smoke). It strips with
+  Python's ``str.strip`` like the reference, which also removes tabs and
+  newlines; Spark's ``trim`` in :func:`csv_field` strips spaces only.
 
 Decode (``.pyt:1328-1332``) is :func:`csv_decode` via ``from_csv`` at the
 compatibility boundary.
@@ -54,7 +57,7 @@ def csv_encode_sql(*exprs: str) -> str:
 
 
 def encode_field_py(v) -> str:
-    """Python mirror of ``.pyt:1308-1323`` (backs q_udf_scalar only)."""
+    """Python mirror of ``.pyt:1308-1323``."""
     if v is None:
         return ""
     s = str(v).strip()

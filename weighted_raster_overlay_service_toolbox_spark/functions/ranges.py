@@ -8,10 +8,14 @@ itself falls in the final range. Remap semantics
 (``UpdateWROClassification.pyt.xml:2``): cell value v in ``[min_i, max_i)``
 -> ``out_i``; suitability domain 0-9, default 5 (``.pyt:86-87, 969-972``).
 
-Everything here builds *column expressions* (CASE chains, struct arrays) --
-JVM-side, whole-stage-codegen friendly. No UDFs, no driver-side loops over
-data; literal range lists are classification metadata (handfuls of rows),
-never data.
+A classification becomes an expression in one way: the ``*_sql``
+emitters below write it as SQL text, which Spark callers parse with
+``F.expr``/``selectExpr`` into one Catalyst expression and the DuckDB
+oracles embed verbatim. Bounds and weights are ``CAST('<repr>' AS
+DOUBLE)`` literals, read bit-identically by both engines. The rest builds
+column expressions (bins, struct arrays). No UDFs, no driver-side loops
+over data; literal range lists are classification metadata (handfuls of
+rows), never data.
 """
 
 from __future__ import annotations
@@ -23,31 +27,53 @@ from pyspark.sql import functions as F
 RangeTriple = tuple[float, float, int]
 
 
-def remap_case(value: Column, ranges: list[RangeTriple]) -> Column:
-    """R39: min-inclusive/max-exclusive CASE chain; unmatched -> NULL."""
-    expr = F.lit(None).cast("int")
-    for lo, hi, out in reversed(ranges):
-        expr = F.when((value >= F.lit(lo)) & (value < F.lit(hi)), F.lit(out)).otherwise(
-            expr
-        )
-    return expr
+def sql_double(v: float) -> str:
+    """A DOUBLE literal that Spark and DuckDB both read bit-exactly.
+
+    Spark parses a bare ``20.0`` as DECIMAL(3,1), and neither engine has
+    a literal for +-inf or NaN, so every bound and weight is the string
+    cast of Python's shortest round-trip ``repr``: ``inf``, ``-inf``,
+    ``nan``, ``-0.0`` and ``5e-324`` all read back as the same double."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def sql_string(s: str) -> str:
+    """A Spark SQL string literal. Spark reads backslash escapes inside
+    string literals, so ``\\`` is doubled along with ``'``; DuckDB does
+    not, so this quoting is exact in DuckDB only for text without a
+    backslash."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def remap_case_sql(value_expr: str, ranges: list[RangeTriple]) -> str:
-    """The identical CASE chain as ANSI SQL (for DuckDB oracles)."""
+    """R39: min-inclusive/max-exclusive CASE chain, the first matching
+    range wins; unmatched (or a NULL value) -> NULL INT. The one emitter
+    of a classification: Spark parses the text, DuckDB oracles embed it."""
     whens = " ".join(
-        f"WHEN {value_expr} >= {lo} AND {value_expr} < {hi} THEN {out}"
+        f"WHEN {value_expr} >= {sql_double(lo)} AND {value_expr} < {sql_double(hi)} "
+        f"THEN {int(out)}"
         for lo, hi, out in ranges
     )
-    return f"CASE {whens} ELSE NULL END"
+    return f"CASE {whens} ELSE NULL END" if ranges else "CAST(NULL AS INT)"
 
 
-def in_any_range(value: Column, ranges: list[tuple[float, float]]) -> Column:
-    """R41 helper: true when value falls in any [lo, hi) -- NoData test."""
-    expr = F.lit(False)
-    for lo, hi in ranges:
-        expr = expr | ((value >= F.lit(lo)) & (value < F.lit(hi)))
-    return expr
+def in_any_range_sql(value_expr: str, ranges: list[tuple[float, float]]) -> str:
+    """R41 NoData test: true when the value falls in any ``[lo, hi)``."""
+    tests = [
+        f"({value_expr} >= {sql_double(lo)} AND {value_expr} < {sql_double(hi)})"
+        for lo, hi in ranges
+    ]
+    return " OR ".join(tests) if tests else "FALSE"
+
+
+def layer_remap_sql(ranges_by_layer: dict[str, list[RangeTriple]]) -> str:
+    """Each ``layer`` row's ``value`` through that layer's CASE chain;
+    NULL for a layer not in the map."""
+    whens = " ".join(
+        f"WHEN layer = {sql_string(name)} THEN {remap_case_sql('value', ranges)}"
+        for name, ranges in ranges_by_layer.items()
+    )
+    return f"CASE {whens} ELSE NULL END" if whens else "CAST(NULL AS INT)"
 
 
 def equal_interval_bounds(n_classes: int = 5):

@@ -12,11 +12,16 @@ weights the layers, and NoData ranges knock cells out
    OutputValues / NoDataRanges, ``.pyt:161-175``) -- catalog rows are
    classification METADATA (a handful), so the collect is driver-side
    by design, never data-sized;
-2. build per-layer remap CASE chains and NoData tests as column
-   expressions (JVM-side, codegen);
+2. emit the per-layer remap CASE chains, the NoData tests, the pivot
+   aggregates and the weighted sum as SQL text (``functions/ranges.py``'s
+   emitters, the same text the DuckDB oracles embed), which Spark parses
+   into a handful of Catalyst expressions -- a few py4j calls per
+   request, not a few per range (JVM-side, codegen);
 3. one shuffle on cell_id pivots remapped layers wide (conditional max,
-   not a generic pivot) and applies  sum(w_i * suit_i)  with the knockout
-   guard.
+   not a generic pivot, :func:`overlay_pivot`) and applies
+   sum(w_i * suit_i) with the knockout guard (:func:`overlay_score`).
+   The fixture WRO queries (``queries/wro.py``) call the same two
+   functions.
 
 Scale: the only data-sized move is the cell_id shuffle; at 100 TB the
 cell table is bucketed by cell_id and the shuffle disappears. Weights and
@@ -25,13 +30,22 @@ classifications ride along as literals inside codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ranges import RangeTriple, in_any_range, remap_case
+from ..functions.ranges import (
+    RangeTriple,
+    in_any_range_sql,
+    layer_remap_sql,
+    sql_double,
+    sql_string,
+)
+
+#: a layer's decoded classification: remap ranges plus NoData ranges.
+Layer = tuple[list[RangeTriple], list[tuple[float, float]]]
 
 
-def decode_catalog_row(row) -> tuple[list[RangeTriple], list[tuple[float, float]]]:
+def decode_catalog_row(row) -> Layer:
     """Parse one catalog row's CSV classification (``.pyt:161-175``):
     flat bound pairs + parallel outputs -> (lo, hi, out) triples, plus
     NoData (lo, hi) pairs."""
@@ -45,6 +59,50 @@ def decode_catalog_row(row) -> tuple[list[RangeTriple], list[tuple[float, float]
         nd = [float(x) for x in row["NoDataRanges"].split(",")]
         nodata = [(nd[2 * i], nd[2 * i + 1]) for i in range(len(nd) // 2)]
     return ranges, nodata
+
+
+def overlay_pivot(cells_df: DataFrame, layers: dict[str, Layer]) -> DataFrame:
+    """Remap the long cell table (``layer, cell_id, value``) and pivot it
+    wide: ``cell_id, s_0 .. s_{n-1}, any_knockout``, where ``s_i`` is the
+    suitability of the i-th layer of ``layers`` and ``any_knockout`` is 1
+    when any layer's value of the cell falls in that layer's NoData
+    ranges (R39 + R41)."""
+    names = list(layers)
+    knocked = " OR ".join(
+        f"(layer = {sql_string(name)} AND ({in_any_range_sql('value', nodata)}))"
+        for name, (_, nodata) in layers.items()
+        if nodata
+    )
+    scored = cells_df.filter(F.col("layer").isin(*names)).selectExpr(
+        "cell_id",
+        "layer",
+        f"{layer_remap_sql({n: r for n, (r, _) in layers.items()})} AS suit",
+        f"{knocked or 'FALSE'} AS knocked",
+    )
+    return scored.groupBy("cell_id").agg(
+        *[
+            F.expr(f"MAX(CASE WHEN layer = {sql_string(name)} THEN suit END) AS s_{i}")
+            for i, name in enumerate(names)
+        ],
+        F.expr("MAX(CASE WHEN knocked THEN 1 ELSE 0 END) AS any_knockout"),
+    )
+
+
+def weighted_sum_sql(weights: list[float]) -> str:
+    """``w_0 * s_0 + w_1 * s_1 + ...`` over :func:`overlay_pivot`'s
+    columns (R40)."""
+    terms = [f"{sql_double(w)} * s_{i}" for i, w in enumerate(weights)]
+    return " + ".join(terms) or "CAST(NULL AS DOUBLE)"
+
+
+def overlay_score(wide: DataFrame, weights: list[float]) -> DataFrame:
+    """``cell_id, score`` from :func:`overlay_pivot`'s frame: the weighted
+    sum, NULL for a knocked-out cell."""
+    return wide.selectExpr(
+        "cell_id",
+        f"CASE WHEN any_knockout = 1 THEN NULL ELSE {weighted_sum_sql(weights)} END"
+        " AS score",
+    )
 
 
 def run_overlay(
@@ -67,33 +125,4 @@ def run_overlay(
     missing = set(weights) - set(meta)
     if missing:
         raise KeyError(f"weights reference unknown catalog layers: {sorted(missing)}")
-
-    layer = F.col("layer")
-    value = F.col("value")
-    suit: Column = F.lit(None).cast("int")
-    knocked: Column = F.lit(False)
-    for name, (ranges, nodata) in meta.items():
-        suit = F.when(layer == name, remap_case(value, ranges)).otherwise(suit)
-        if nodata:
-            knocked = knocked | ((layer == name) & in_any_range(value, nodata))
-
-    scored = cells_df.filter(layer.isin(*meta.keys())).select(
-        "cell_id", layer.alias("layer"), suit.alias("suit"), knocked.alias("knocked")
-    )
-    wide = scored.groupBy("cell_id").agg(
-        *[
-            F.max(F.when(F.col("layer") == name, F.col("suit"))).alias(f"s_{i}")
-            for i, name in enumerate(meta)
-        ],
-        F.max(F.when(F.col("knocked"), 1).otherwise(0)).alias("any_knockout"),
-    )
-    score = None
-    for i, name in enumerate(meta):
-        term = F.lit(weights[name]) * F.col(f"s_{i}")
-        score = term if score is None else score + term
-    return wide.select(
-        "cell_id",
-        F.when(F.col("any_knockout") == 1, F.lit(None).cast("double"))
-        .otherwise(score)
-        .alias("score"),
-    )
+    return overlay_score(overlay_pivot(cells_df, meta), [weights[n] for n in meta])

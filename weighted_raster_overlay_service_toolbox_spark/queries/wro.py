@@ -3,7 +3,13 @@
 
 Citations per query reference ``WROS/Weighted Raster Overlay Service.pyt``.
 The classification fixtures (ranges/weights/catalog rows) live in
-``plans/wro.py``; expression builders in ``functions/ranges.py``.
+``plans/wro.py``. Every remap, NoData test and weighted sum here is SQL
+text from ``functions/ranges.py``'s emitters: the Spark queries parse it
+(``F.expr``/``selectExpr``, through ``plans/overlay.py``'s pivot and
+score, the catalog overlay's own) and the DuckDB oracles embed it, so
+both engines run one text (a Python model checks that text in
+``tests/test_range_properties.py``). The oracles' pivot and weighted sum
+(``_PIVOT_SQL``, ``_WEIGHTED``) stay hand-written as the reference.
 """
 
 from __future__ import annotations
@@ -17,14 +23,19 @@ from pyspark.sql.functions import broadcast
 from ..functions.ranges import (
     contiguity_errors,
     equal_interval_bounds,
-    in_any_range,
-    remap_case,
-    remap_case_sql,
+    layer_remap_sql,
     unique_value_ranges,
+)
+from ..plans.overlay import (
+    overlay_pivot,
+    overlay_score,
+    run_overlay,
+    weighted_sum_sql,
 )
 from ..plans.wro import (
     LAYER_NODATA,
     LAYER_RANGES,
+    LAYER_WEIGHTS,
     WRO_CELLS_SQL,
     wro_catalog,
     wro_catalog_sql,
@@ -82,19 +93,8 @@ def q_wro_equal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _remap_all_layers(value: F.Column, layer: F.Column) -> F.Column:
-    expr = F.lit(None).cast("int")
-    for name, ranges in LAYER_RANGES.items():
-        expr = F.when(layer == name, remap_case(value, ranges)).otherwise(expr)
-    return expr
-
-
-def _remap_all_layers_sql(value_expr: str = "value", layer_expr: str = "layer") -> str:
-    whens = " ".join(
-        f"WHEN {layer_expr} = '{name}' THEN {remap_case_sql(value_expr, ranges)}"
-        for name, ranges in LAYER_RANGES.items()
-    )
-    return f"CASE {whens} ELSE NULL END"
+#: the fixture layers' remap CASE, one text for Spark and the oracles.
+_REMAP_SQL = layer_remap_sql(LAYER_RANGES)
 
 
 @query(
@@ -102,7 +102,7 @@ def _remap_all_layers_sql(value_expr: str = "value", layer_expr: str = "layer") 
     oracle=f"""
     WITH {WRO_CELLS_SQL}
     SELECT layer, cell_id, value,
-           {_remap_all_layers_sql()} AS suitability
+           {_REMAP_SQL} AS suitability
     FROM wro_cells
     """,
 )
@@ -112,10 +112,7 @@ def q_wro_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no join, no shuffle."""
     cells = wro_cells(spark, sf_dir)
     return cells.select(
-        "layer",
-        "cell_id",
-        "value",
-        _remap_all_layers(F.col("value"), F.col("layer")).alias("suitability"),
+        "layer", "cell_id", "value", F.expr(_REMAP_SQL).alias("suitability")
     )
 
 
@@ -165,7 +162,7 @@ _PIVOT_SQL = f"""
     WITH {WRO_CELLS_SQL},
     suit AS (
         SELECT layer, cell_id, value,
-               {_remap_all_layers_sql()} AS suitability
+               {_REMAP_SQL} AS suitability
         FROM wro_cells
     ),
     wide AS (
@@ -181,29 +178,16 @@ _PIVOT_SQL = f"""
 
 
 def _overlay_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared long->wide pivot of remapped suitabilities + NoData flag.
+    """The fixture layers through the catalog overlay's own pivot
+    (``plans/overlay.overlay_pivot``): ``cell_id, s_0 .. s_2,
+    any_knockout`` in ``LAYER_RANGES`` order (quantity, discount,
+    price_k)."""
+    layers = {n: (r, LAYER_NODATA.get(n, [])) for n, r in LAYER_RANGES.items()}
+    return overlay_pivot(wro_cells(spark, sf_dir), layers)
 
-    groupBy(cell_id).pivot(...) is one shuffle on cell_id; at 100 TB the
-    cell table would be bucketed by cell_id making this shuffle-free."""
-    cells = wro_cells(spark, sf_dir)
-    suit = cells.select(
-        "layer",
-        "cell_id",
-        "value",
-        _remap_all_layers(F.col("value"), F.col("layer")).alias("suitability"),
-    )
-    nodata = F.lit(False)
-    for layer, ranges in LAYER_NODATA.items():
-        nodata = nodata | (
-            (F.col("layer") == layer) & in_any_range(F.col("value"), ranges)
-        )
-    return suit.groupBy("cell_id").agg(
-        F.max(F.when(F.col("layer") == "quantity", F.col("suitability"))).alias("s_q"),
-        F.max(F.when(F.col("layer") == "discount", F.col("suitability"))).alias("s_d"),
-        F.max(F.when(F.col("layer") == "price_k", F.col("suitability"))).alias("s_p"),
-        F.max(F.when(nodata, 1).otherwise(0)).alias("nodata_hit"),
-    )
 
+#: overlay weights in the pivot's column order.
+_WEIGHTS = [LAYER_WEIGHTS[n] for n in LAYER_RANGES]
 
 _WEIGHTED = (
     "CAST(0.5 AS DOUBLE) * s_q + CAST(0.25 AS DOUBLE) * s_d "
@@ -223,13 +207,13 @@ def q_wro_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R40 (``README.md:9-11``): user-weighted sum of remapped layers.
     Weights 0.5/0.25/0.25 are exact binary fractions -- double arithmetic
     is exact, no rounding needed."""
-    wide = _overlay_wide(spark, sf_dir)
-    score = (
-        F.lit(0.5) * F.col("s_q")
-        + F.lit(0.25) * F.col("s_d")
-        + F.lit(0.25) * F.col("s_p")
+    return _overlay_wide(spark, sf_dir).selectExpr(
+        "cell_id",
+        "s_0 AS s_q",
+        "s_1 AS s_d",
+        "s_2 AS s_p",
+        f"{weighted_sum_sql(_WEIGHTS)} AS score",
     )
-    return wide.select("cell_id", "s_q", "s_d", "s_p", score.alias("score"))
 
 
 @query(
@@ -244,18 +228,7 @@ def q_wro_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_wro_nodata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R41 (``UpdateWROLayerInfo.pyt.xml:2``): a cell in any layer's NoData
     range is knocked out -- NULL regardless of other layers."""
-    wide = _overlay_wide(spark, sf_dir)
-    score = (
-        F.lit(0.5) * F.col("s_q")
-        + F.lit(0.25) * F.col("s_d")
-        + F.lit(0.25) * F.col("s_p")
-    )
-    return wide.select(
-        "cell_id",
-        F.when(F.col("nodata_hit") == 1, F.lit(None).cast("double"))
-        .otherwise(score)
-        .alias("score"),
-    )
+    return overlay_score(_overlay_wide(spark, sf_dir), _WEIGHTS)
 
 
 @query(
@@ -588,9 +561,6 @@ def q_wro_overlay_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV TEXT columns at run time instead of literal fixtures -- the full
     R32 decode -> R39 remap -> R40 weighted sum -> R41 knockout pipeline
     a service user runs."""
-    from ..plans.overlay import run_overlay
-    from ..plans.wro import LAYER_WEIGHTS, wro_catalog, wro_cells
-
     return run_overlay(wro_cells(spark, sf_dir), wro_catalog(spark), LAYER_WEIGHTS)
 
 

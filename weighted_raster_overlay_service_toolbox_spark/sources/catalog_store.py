@@ -22,8 +22,10 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..session import local_frame
@@ -139,10 +141,23 @@ def load_catalog(
                 f"no snapshot v{version} at {path} "
                 f"(retained: {catalog_versions(path)})"
             )
-        return spark.read.parquet(vpath)
+        return _read_snapshot(spark, vpath)
     if not catalog_exists(path):
         raise FileNotFoundError(f"no catalog at {path}")
-    return spark.read.parquet(path)
+    return _read_snapshot(spark, path)
+
+
+def _read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """Read one snapshot dir with the schema of its own parquet footer,
+    taken on the driver: ``spark.read.parquet`` without a schema runs one
+    inference job per call, and a fixed ``CATALOG_SCHEMA`` would hide a
+    foreign catalog's missing columns from :func:`missing_columns`."""
+    part = min(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    schema = from_arrow_schema(pq.read_schema(os.path.join(path, part)))
+    return spark.read.schema(schema).parquet(path)
 
 
 def missing_columns(df: DataFrame, required: list[str]) -> list[str]:

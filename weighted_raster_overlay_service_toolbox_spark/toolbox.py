@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .functions.csvcodec import csv_encode, csv_field
+from .functions.csvcodec import csv_encode_py, csv_field
 from .functions.ranges import (
     DEFAULT_INPUT_RANGES,
     DEFAULT_OUTPUT_VALUES,
@@ -582,14 +582,16 @@ def update_classification(
     flat = [x for r in rows for x in (r["lo"], r["hi"])]
     in_ranges = ",".join(_num_str(v) for v in flat)
     out_values = ",".join(str(r["out"]) for r in rows)
-    labels_col = csv_encode(*[F.lit(r["label"]) for r in rows]) if rows else F.lit("")
+    # the labels are a handful of UI strings: encode them on the driver,
+    # with the reference's own str(v).strip() (.pyt:1308-1323)
+    labels = csv_encode_py([r["label"] for r in rows])
 
     key = F.col("Name") == name
     updated = catalog_df.withColumns(
         {
             "InputRanges": F.when(key, F.lit(in_ranges)).otherwise(F.col("InputRanges")),
             "OutputValues": F.when(key, F.lit(out_values)).otherwise(F.col("OutputValues")),
-            "RangeLabels": F.when(key, labels_col).otherwise(F.col("RangeLabels")),
+            "RangeLabels": F.when(key, F.lit(labels)).otherwise(F.col("RangeLabels")),
         }
     )
     return updated, errors
