@@ -6,7 +6,8 @@ from __future__ import annotations
 import os
 
 import pytest
-
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from weighted_raster_overlay_service_toolbox_spark.sources.catalog_store import (
@@ -280,9 +281,10 @@ def test_catalog_diff_emits_only_changed_keys(spark):
 
 
 def test_load_catalog_runs_no_job(spark, tmp_path, job_ids):
-    """The footer schema is read on the driver: loading a catalog runs no
-    Spark job before the caller's first action (schema inference ran
-    one per call), live or versioned."""
+    """A catalog is read with pyarrow on the driver and returned as a
+    local relation: loading it runs no Spark job, live or versioned, and
+    neither does collecting it (a Spark read ran one job per action, and
+    one more per load for schema inference)."""
     path = str(tmp_path / "cat")
     create_catalog(spark, path)
     append_rows(
@@ -292,6 +294,7 @@ def test_load_catalog_runs_no_job(spark, tmp_path, job_ids):
     replace_catalog(path, cat.withColumn("Title", F.lit("B")), keep_history=2)
     assert job_ids("test-load-live", lambda: load_catalog(spark, path)) == []
     assert job_ids("test-load-v1", lambda: load_catalog(spark, path, version=1)) == []
+    assert job_ids("test-load-collect", lambda: load_catalog(spark, path).collect()) == []
     assert [tuple(r) for r in load_catalog(spark, path).select("Name", "Title").collect()] == [("a", "B")]
     assert load_catalog(spark, path, version=1).select("Title").first()[0] == "A"
 
@@ -314,3 +317,64 @@ def test_foreign_catalog_keeps_its_missing_columns(spark, tmp_path):
     cat = load_catalog(spark, str(path))
     assert missing_columns(cat, REQUIRED_CLASSIFICATION) == ["Title"]
     assert cat.first()["InputRanges"] == "0.0,1.0"
+
+
+def _reference_merge(cat, updates, key="Name"):
+    """The MERGE as a full-outer join on the key, the store's former Spark
+    plan: non-null update values win, a NULL key matches nothing."""
+    aligned = updates.select(
+        *[
+            F.col(c).cast("string").alias(c)
+            if c in updates.columns
+            else F.lit(None).cast("string").alias(c)
+            for c in cat.columns
+        ]
+    )
+    u = aligned.select(
+        F.col(key).alias("_uk"),
+        *[F.col(c).alias(f"_u_{c}") for c in cat.columns if c != key],
+    )
+    return cat.join(u, cat[key] == u["_uk"], "full_outer").select(
+        F.coalesce(cat[key], F.col("_uk")).alias(key),
+        *[
+            F.coalesce(F.col(f"_u_{c}"), cat[c]).alias(c)
+            for c in cat.columns
+            if c != key
+        ],
+    )
+
+
+_MERGE_ROWS = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", "c", None]),
+        st.sampled_from(["T1", "T2", None]),
+        st.sampled_from(["D1", None]),
+    ),
+    max_size=5,
+)
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(current=_MERGE_ROWS, updates=_MERGE_ROWS)
+def test_merge_rows_matches_full_outer_join(spark, tmp_path, current, updates):
+    """The driver-side merge gives the multiset of rows of the full-outer
+    join it replaced, with duplicate and NULL keys on both sides, NULL
+    update values and new keys."""
+    from collections import Counter
+
+    from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+    from weighted_raster_overlay_service_toolbox_spark.sources.catalog_store import (
+        merge_rows,
+    )
+
+    schema = "Name string, Title string, Description string"
+    store = str(tmp_path / "merge_ref")
+    create_catalog(spark, store, overwrite=True)
+    append_rows(spark, store, local_frame(spark, current, schema))
+    upd = local_frame(spark, updates, schema)
+    want = Counter(
+        tuple(r) for r in _reference_merge(load_catalog(spark, store), upd).collect()
+    )
+    merge_rows(spark, store, upd)
+    assert Counter(tuple(r) for r in load_catalog(spark, store).collect()) == want

@@ -2,12 +2,15 @@
 
 ``spark.createDataFrame(list)`` parallelizes its rows into a Python RDD,
 so every action on the frame runs a job of Python-worker tasks (about
-0.3 s on 4 cores, even for an empty list). The toolbox's error frames and
-the catalog store's empty schema frame are driver-built and tiny; built
-through ``session.local_frame`` (a ``pyarrow.Table`` input, which Spark
-turns into a LocalRelation) they collect without a job. This lint keeps
-every other construction out of those modules, the same discipline as
-tests/test_hof_lint.py: a direct ``createDataFrame`` call there fails.
+0.3 s on 4 cores, even for an empty list). The toolbox's error frames,
+the catalog store's loaded catalogs and the WRO fixture catalog are
+driver-built and tiny; built through ``session.local_frame`` (a
+``pyarrow.Table`` input, which Spark turns into a LocalRelation) they
+collect without a job. This lint keeps every other construction out of
+those modules, the same discipline as tests/test_hof_lint.py: a direct
+``createDataFrame`` call there fails. The catalog store also reads and
+commits with pyarrow on the driver, so Spark's reader, writer and
+partitioning calls stay out of it.
 """
 
 from __future__ import annotations
@@ -20,7 +23,11 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / (
 )
 
 #: modules whose small frames must go through ``session.local_frame``.
-CONTROL_PATH = ("toolbox.py", "sources/catalog_store.py")
+CONTROL_PATH = ("toolbox.py", "sources/catalog_store.py", "plans/wro.py")
+
+#: Spark I/O and partitioning attributes banned from the catalog store
+#: (``F.coalesce``, the column function, is not a partitioning call).
+SPARK_IO = ("read", "write", "repartition", "coalesce")
 
 
 def _calls(rel: str, attr: str) -> list[int]:
@@ -53,6 +60,25 @@ def test_control_path_builds_frames_only_through_local_frame():
     )
     # each module still builds its frames, through the helper
     assert all(_helper_calls(rel) for rel in CONTROL_PATH)
+
+
+def _spark_io(rel: str) -> list[tuple[int, str]]:
+    tree = ast.parse((PKG / rel).read_text())
+    return [
+        (n.lineno, n.attr)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and n.attr in SPARK_IO
+        and not (isinstance(n.value, ast.Name) and n.value.id == "F")
+    ]
+
+
+def test_catalog_store_has_no_spark_read_or_write():
+    found = _spark_io("sources/catalog_store.py")
+    assert not found, (
+        "the catalog store reads with pq.read_table and commits with"
+        f" pq.write_table on the driver -- no Spark read or write: {found}"
+    )
 
 
 def test_local_frame_is_the_one_arrow_construction():

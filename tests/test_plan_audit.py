@@ -193,8 +193,11 @@ CHECKPOINTED_ALLOWED = {
     "q_win_percent_rank",  # r14: global_rank's pinned range-partitioned
                            # relation feeds the counts pass and the rank
                            # pass (operators/rank.py; one range shuffle)
+    # q_wro_decode_ranges LEFT this set: its only ExistingRDD was the
+    # fixture catalog, now a LocalTableScan (plans/wro.py wro_catalog
+    # builds it through session.local_frame). The four below still
+    # parallelize their own small Python-list frames.
     "q_wro_catalog_update",
-    "q_wro_decode_ranges",
     "q_wro_dup_names",
     "q_wro_minmax_validate",
     "q_wro_schema_check",

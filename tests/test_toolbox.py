@@ -371,6 +371,22 @@ def test_create_catalog_colorizer_label_dispatch(spark):
     assert errors.filter("code = 'uv_cardinality'").count() == 1
 
 
+def test_create_catalog_strips_colorizer_label_whitespace(spark):
+    """Colorizer labels are stripped of tabs and newlines like the
+    reference's ``str(v).strip()`` (``.pyt:1308-1323``), not of spaces
+    only."""
+    layers = spark.createDataFrame(
+        [("uv", "Thematic", [1.0, 3.0], ["FOREST", "WATER"],
+          ["forest", "water"], ["\tDense, forest ", "Open water\r\n"])],
+        "name string, title string, unique_values array<double>, "
+        "uv_field_values array<string>, colorizer_values array<string>, "
+        "colorizer_labels array<string>",
+    )
+    cells = _cells(spark, [("uv", 1, 1.0)])
+    catalog, _ = create_wro_catalog(layers, cells)
+    assert catalog.first()["RangeLabels"] == '"Dense, forest",Open water'
+
+
 def test_update_classification_stats_via_scratch_export(spark):
     """R12 (``.pyt:283-304``): with no stats_df, cells_df routes through
     the scratch-export step and min/max validation still fires."""
@@ -444,10 +460,11 @@ def test_error_frames_collect_without_a_job(spark, job_ids):
 
 
 def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path, job_ids):
-    """On a parquet-backed catalog, a classification edit runs one job for
-    the key check and one to collect the value table (6 with the Spark
-    sort, the two-job key check and a Python-list error frame); a
-    layer-info edit runs only the key check (3 before)."""
+    """On a catalog loaded from the store (a local relation), the key
+    check runs no job: a classification edit runs one job, to collect its
+    caller's value table (a Python-list frame), and a layer-info edit
+    runs none (2 and 1 jobs with the Spark-read catalog, 6 and 3 before
+    that)."""
     path = str(tmp_path / "catalog")
     layers = _layers(spark, [("elev", "Elevation"), ("slope", "Slope")])
     cells = _cells(spark, [("elev", 1, 0.0), ("elev", 2, 100.0), ("slope", 1, 5.0)])
@@ -465,13 +482,13 @@ def test_keyed_edits_run_only_the_jobs_their_answer_needs(spark, tmp_path, job_i
         assert errors.collect() == []
         return updated
 
-    assert 0 < len(job_ids("test-classify-jobs", classify)) <= 2
+    assert len(job_ids("test-classify-jobs", classify)) == 1
 
     def layer_info():
         _, errors = update_layer_info(cat, "slope", title="Slope (deg)")
         assert errors.collect() == []
 
-    assert 0 < len(job_ids("test-layer-info-jobs", layer_info)) <= 1
+    assert len(job_ids("test-layer-info-jobs", layer_info)) == 0
     # the answers are those of the keyed edits, not of the job counting
     row = classify().filter("Name = 'elev'").first()
     assert row["InputRanges"] == "0.0,50.0,50.0,101.0"

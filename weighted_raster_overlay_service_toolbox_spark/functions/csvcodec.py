@@ -14,14 +14,20 @@ Three forms here, all with identical semantics:
 - :func:`csv_encode_py` -- the same encode in Python, for values already
   on the driver: ``toolbox.update_classification``'s range labels, and
   the declared ``q_udf_scalar`` (UDF-machinery smoke). It strips with
-  Python's ``str.strip`` like the reference, which also removes tabs and
-  newlines; Spark's ``trim`` in :func:`csv_field` strips spaces only.
+  Python's ``str.strip`` like the reference.
+
+The column and SQL forms strip ``string.whitespace`` (the one-argument
+``trim`` of Spark and DuckDB strips spaces only); the separators
+U+001C-U+001F and non-ASCII whitespace such as U+00A0, which
+``str.strip`` also removes, still differ.
 
 Decode (``.pyt:1328-1332``) is :func:`csv_decode` via ``from_csv`` at the
 compatibility boundary.
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,7 +36,7 @@ from pyspark.sql import functions as F
 def csv_field(col: Column) -> Column:
     """Encode ONE value as an RFC-4180 field (``.pyt:1308-1323``):
     null -> '', strip, quote-if-needed with '""' doubling."""
-    s = F.trim(F.coalesce(col.cast("string"), F.lit("")))
+    s = F.trim(F.coalesce(col.cast("string"), F.lit("")), F.lit(string.whitespace))
     needs_quote = s.contains(",") | s.contains('"')
     quoted = F.concat(F.lit('"'), F.regexp_replace(s, '"', '""'), F.lit('"'))
     return F.when(needs_quote, quoted).otherwise(s)
@@ -43,7 +49,8 @@ def csv_encode(*cols: Column) -> Column:
 
 def csv_field_sql(expr: str) -> str:
     """DuckDB SQL equivalent of :func:`csv_field`."""
-    s = f"TRIM(COALESCE(CAST({expr} AS VARCHAR), ''))"
+    chars = " || ".join(f"chr({ord(c)})" for c in string.whitespace)
+    s = f"TRIM(COALESCE(CAST({expr} AS VARCHAR), ''), {chars})"
     return (
         f"CASE WHEN contains({s}, ',') OR contains({s}, '\"') "
         f"THEN '\"' || replace({s}, '\"', '\"\"') || '\"' "

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ranges import RangeTriple
+from ..session import local_frame
 from ..sources import load_table
 
 # --- parsed classification metadata (FIXTURES.md B; bounds follow the
@@ -107,8 +108,8 @@ def wro_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def wro_catalog(spark: SparkSession) -> DataFrame:
-    """The catalog fixture as a DataFrame (broadcast-sized metadata)."""
-    return spark.createDataFrame(CATALOG_ROWS, CATALOG_SCHEMA)
+    """The catalog fixture as a local relation: collects run no job."""
+    return local_frame(spark, CATALOG_ROWS, CATALOG_SCHEMA)
 
 
 def wro_catalog_sql() -> str:

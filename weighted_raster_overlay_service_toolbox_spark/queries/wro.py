@@ -668,8 +668,8 @@ def q_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE (upsert) into the catalog store: one matched row updates
     (non-null update columns win; its NULL Description keeps the current
     value) and one unmatched row inserts -- the WHEN MATCHED / WHEN NOT
-    MATCHED surface (sources/catalog_store.py merge_rows), executed as a
-    full-outer join + snapshot replace. The oracle replays the merge
+    MATCHED surface (sources/catalog_store.py merge_rows), merged over
+    the driver rows + snapshot replace. The oracle replays the merge
     analytically."""
     from ..sources.catalog_store import (
         append_rows,

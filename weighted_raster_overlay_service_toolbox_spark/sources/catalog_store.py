@@ -1,32 +1,38 @@
 """Catalog persistence: the reference's DDL / existence / introspection
-surface (R6-R11) as a parquet-backed store.
+surface (R6-R11) as a parquet-backed store kept on the driver.
 
 The reference creates a mosaic dataset (``CreateMosaicDataset_management``,
 ``WROS/Weighted Raster Overlay Service.pyt:805``), adds its TEXT columns by
 DDL (``AddFields_management``, ``.pyt:814``), drops-if-exists
 (``Delete_management``, ``.pyt:794-796``), existence-checks with
-``arcpy.Exists`` (``.pyt:284, 674, 765``), and validates schema-by-name
-with ``ListFields`` (``.pyt:139-147, 441-449``). Here the catalog is a
-parquet directory: DDL is writing an empty frame with the schema,
-existence is a filesystem check, introspection is ``df.schema``, and the
-keyed read-modify-write update cycle becomes read -> CASE override ->
-atomic replace.
+``arcpy.Exists`` (``.pyt:284, 674, 765``), validates schema-by-name
+with ``ListFields`` (``.pyt:139-147, 441-449``), and edits rows one at a
+time, client-side, with an ``UpdateCursor`` (``.pyt:318, 547, 879``).
+Here the catalog is a parquet directory: DDL is writing an empty table
+with the schema, existence is a filesystem check, introspection is
+``df.schema``, and the keyed read-modify-write cycle becomes read -> CASE
+override -> atomic replace.
 
-Scale: the catalog is layer-metadata-sized. The store keeps it a plain
-parquet dir (snapshot-replace writes); at real scale the same API maps to
-a table format with MERGE, without changing callers.
+Scale: the catalog has one row per raster layer at any data scale, so
+it stays on the driver. A load is ``pq.read_table`` as a LocalRelation
+(``session.local_frame``), on which key checks, metadata collects and
+CASE overrides run no Spark job; a commit collects the rows and writes
+ONE file with ``pq.write_table``. Callers pass and receive DataFrames, so
+at real scale the same API maps to a table format with MERGE.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from datetime import timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from ..session import local_frame
 
@@ -72,7 +78,27 @@ def create_catalog(spark: SparkSession, path: str, overwrite: bool = False) -> N
         # a rebuilt store must start with a clean history even when the
         # live dir itself was already removed by the caller
         purge_history(path)
-    local_frame(spark, [], CATALOG_SCHEMA).write.parquet(path)
+    _write_snapshot(path, local_frame(spark, [], CATALOG_SCHEMA))
+
+
+def _write_snapshot(path: str, df: DataFrame) -> None:
+    """The store's one writer: ``df``'s rows, collected (no job on a
+    LocalRelation; ``toArrow()`` runs one), as ONE parquet file, then the
+    ``_SUCCESS`` marker :func:`recover_catalog` keys on. Timestamps are
+    stored as INT96, as Spark's writer stores them, so a state table
+    committed here (``q_stream_upsert``) reads back as a plain TIMESTAMP
+    in other engines."""
+    ts = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampType)]
+    rows = [r.asDict(recursive=True) for r in df.collect()]
+    for d in rows:  # collected timestamps are naive local times
+        d.update({c: d[c].astimezone(timezone.utc) for c in ts if d[c] is not None})
+    os.makedirs(path)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(df.schema)),
+        os.path.join(path, "part-00000.parquet"),
+        use_deprecated_int96_timestamps=True,
+    )
+    open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def _swap_paths(path: str) -> tuple[str, str]:
@@ -141,23 +167,13 @@ def load_catalog(
                 f"no snapshot v{version} at {path} "
                 f"(retained: {catalog_versions(path)})"
             )
-        return _read_snapshot(spark, vpath)
-    if not catalog_exists(path):
+        path = vpath
+    elif not catalog_exists(path):
         raise FileNotFoundError(f"no catalog at {path}")
-    return _read_snapshot(spark, path)
-
-
-def _read_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    """Read one snapshot dir with the schema of its own parquet footer,
-    taken on the driver: ``spark.read.parquet`` without a schema runs one
-    inference job per call, and a fixed ``CATALOG_SCHEMA`` would hide a
-    foreign catalog's missing columns from :func:`missing_columns`."""
-    part = min(
-        f for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    schema = from_arrow_schema(pq.read_schema(os.path.join(path, part)))
-    return spark.read.schema(schema).parquet(path)
+    # the file's own schema, not CATALOG_SCHEMA: a foreign catalog's
+    # missing columns must stay visible to missing_columns
+    table = pq.read_table(path)
+    return local_frame(spark, table, from_arrow_schema(table.schema))
 
 
 def missing_columns(df: DataFrame, required: list[str]) -> list[str]:
@@ -166,11 +182,10 @@ def missing_columns(df: DataFrame, required: list[str]) -> list[str]:
     return [c for c in required if c not in have]
 
 
-def append_rows(spark: SparkSession, path: str, rows: DataFrame) -> None:
-    """R5 bulk load (``AddRastersToMosaicDataset``, ``.pyt:842``): align
-    to the catalog schema by name, fill absent columns with NULL."""
-    cat = load_catalog(spark, path)
-    aligned = rows.select(
+def _aligned(cat: DataFrame, rows: DataFrame) -> DataFrame:
+    """``rows`` aligned to the catalog's columns by name, cast to string,
+    absent columns NULL."""
+    return rows.select(
         *[
             F.col(c).cast("string").alias(c)
             if c in rows.columns
@@ -178,17 +193,15 @@ def append_rows(spark: SparkSession, path: str, rows: DataFrame) -> None:
             for c in cat.columns
         ]
     )
-    # ONE file per append (r15, guide section 6): the catalog is
-    # layer-metadata-sized, but an un-coalesced write emits one tiny
-    # part file per upstream partition plus per-file commit ceremony --
-    # the small-files cost paid again on every subsequent load.
-    # repartition(1), NOT coalesce(1): coalesce propagates the 1-task
-    # constraint up through the aligning projection into the upstream
-    # plan, serializing its computation (paired A/B on q_catalog_merge:
-    # coalesce ~6.3s vs repartition ~1.9s); the keyless repartition is
-    # a tiny exchange of metadata-sized rows that leaves the upstream
-    # stage parallel.
-    aligned.repartition(1).write.mode("append").parquet(path)
+
+
+def append_rows(spark: SparkSession, path: str, rows: DataFrame) -> None:
+    """R5 bulk load (``AddRastersToMosaicDataset``, ``.pyt:842``): align
+    to the catalog schema by name, fill absent columns with NULL. The
+    append is a :func:`replace_catalog` of the current rows plus the new
+    ones, so the store has one write path."""
+    cat = load_catalog(spark, path)
+    replace_catalog(path, cat.union(_aligned(cat, rows)))
 
 
 def merge_rows(
@@ -200,36 +213,23 @@ def merge_rows(
 ) -> None:
     """MERGE (upsert) into the catalog: rows whose ``key`` matches an
     existing row replace it column-by-column (non-null update values
-    win, nulls keep the current value); unmatched rows insert. Runs as
-    one full-outer join + snapshot replace -- the WHEN MATCHED THEN
-    UPDATE / WHEN NOT MATCHED THEN INSERT shape of a table format's
-    MERGE, observable-equivalent over the plain-parquet store.
-
-    Scale: the catalog is metadata-sized so snapshot-replace is fine; at
-    real scale the identical call maps onto a format MERGE (copy-on-write
-    or MoR) without changing callers."""
+    win, nulls keep the current value); unmatched rows insert. The rows
+    are those of a full-outer join on the key (one per matching update;
+    a NULL key matches nothing), merged over the driver rows: one job
+    collects the updates, where the join of two LocalRelations runs
+    three. At real scale the call maps onto a format MERGE."""
     cat = load_catalog(spark, path)
-    aligned = updates.select(
-        *[
-            F.col(c).cast("string").alias(c)
-            if c in updates.columns
-            else F.lit(None).cast("string").alias(c)
-            for c in cat.columns
-        ]
-    )
-    u = aligned.select(
-        F.col(key).alias("_uk"),
-        *[F.col(c).alias(f"_u_{c}") for c in cat.columns if c != key],
-    )
-    merged = cat.join(u, cat[key] == u["_uk"], "full_outer").select(
-        F.coalesce(cat[key], F.col("_uk")).alias(key),
-        *[
-            F.coalesce(F.col(f"_u_{c}"), cat[c]).alias(c)
-            for c in cat.columns
-            if c != key
-        ],
-    )
-    replace_catalog(path, merged, keep_history=keep_history)
+    current = cat.collect()
+    by_key: dict = {}
+    for u in _aligned(cat, updates).collect():
+        by_key.setdefault(u[key], []).append(u)
+    merged = []
+    for r in current:
+        matches = by_key.get(r[key], []) if r[key] is not None else []
+        merged += [[c if v is None else v for c, v in zip(r, u)] for u in matches] or [r]
+    have = {r[key] for r in current}
+    merged += [u for k, us in by_key.items() if k is None or k not in have for u in us]
+    replace_catalog(path, local_frame(spark, merged, cat.schema), keep_history=keep_history)
 
 
 def catalog_diff(
@@ -301,18 +301,7 @@ def replace_catalog(
     recover_catalog(path)
     tmp, old = _swap_paths(path)
     shutil.rmtree(tmp, ignore_errors=True)
-    # ONE file per snapshot commit (r15, VERDICT r14 #6 / guide section
-    # 6): the merged/updated relation arrives with join-output
-    # partitioning (mostly empty tasks at catalog size), and every
-    # versioned replace used to commit that many part files. A single
-    # file per snapshot cuts write-task and per-file commit overhead
-    # per MERGE/replace and keeps history dirs one-file-per-version.
-    # repartition(1), NOT coalesce(1): coalesce folds the full-outer
-    # MERGE join itself into one task (paired A/B on q_catalog_merge:
-    # ~6.3s vs ~1.9s); the keyless repartition exchanges only the
-    # metadata-sized snapshot rows and keeps the join parallel. Values
-    # and MERGE semantics untouched.
-    updated.repartition(1).write.parquet(tmp)
+    _write_snapshot(tmp, updated)
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
     os.rename(tmp, path)

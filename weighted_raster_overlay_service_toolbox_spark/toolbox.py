@@ -7,10 +7,10 @@ through UI parameters and geodatabase cursors. Here each tool is a pure
 function: DataFrames in, (result DataFrame, errors DataFrame) out --
 validation messages become error rows instead of UI messages. Every
 data-sized step is a Catalyst plan (no driver-side loops over data); the
-keyed edits' control path runs only the jobs its answer needs: one job
-checks the key, one job collects the UI-sized value table, whose sort and
-checks run on the driver, and error frames are local relations that
-collect without a job.
+keyed edits' control path runs only the jobs its answer needs: on a
+store-loaded catalog (a local relation) the key check and the override
+run none, one job collects the UI-sized value table, whose sort and
+checks run on the driver, and error frames are local relations too.
 
 - :func:`create_wro_catalog`  ~ CreateWeightedOverlayMosaic (``.pyt:570-1303``)
 - :func:`update_classification` ~ UpdateWROClassification (``.pyt:41-343``)
@@ -598,8 +598,8 @@ def update_classification(
 
 
 def _has_key(catalog_df: DataFrame, name: str) -> bool:
-    """Whether a catalog row named ``name`` exists, in one job (a
-    ``limit(1).count()`` runs two)."""
+    """Whether a catalog row named ``name`` exists: no job on a local
+    relation, one on a plan (a ``limit(1).count()`` runs two)."""
     return not catalog_df.filter(F.col("Name") == name).isEmpty()
 
 
