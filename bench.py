@@ -13,13 +13,12 @@ Headline set: one representative per operator family, weighted toward the
 reference's core (WRO classify/remap/overlay) plus the heaviest relational
 and LLM-pipeline shapes -- the queries whose plans matter at 100 TB.
 
-Timing is end-to-end per query (plan + execute + materialize through the
-``noop`` sink on a cached-nothing session), preceded by one warm-up of the
-flagship to amortize JVM/codegen startup out of the first measurement.
-The noop write executes EVERY output column JVM-side -- ``count()`` lets
-Catalyst prune projection-only work (a CASE-chain remap under count()
-never runs), while ``foreach`` would measure Python row shipping instead
-of the query.
+Each row is the min over ``SPARK_GRAFT_BENCH_REPEATS`` (default 3) of
+plan + execute + ``noop`` materialize, after one warm-up and with its
+declared stream inputs staged outside the timer. Warm-up, sink,
+staging, min-of-N and the ``q_join_inner`` host-drift sentinel come from
+``harness.py``; which rows retrain every rep (``memo_cleared_rows``)
+comes from their ``@query(trains=...)`` declaration.
 """
 
 from __future__ import annotations
@@ -28,12 +27,14 @@ import json
 import os
 import re
 import sys
-import time
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from weighted_raster_overlay_service_toolbox_spark.queries import QUERIES
+    import harness
+    from weighted_raster_overlay_service_toolbox_spark.queries.registry import (
+        TRAINS,
+    )
     from weighted_raster_overlay_service_toolbox_spark.session import get_spark
 
     spark = get_spark("wros-spark-bench")
@@ -138,180 +139,48 @@ def main() -> None:
         "q_stream_bpe_apply",           # per-occurrence fold at ingest
     ]
 
-    # Artifact hygiene (VERDICT r12 #4, root-caused this round): reading
-    # a foreachBatch parquet sink back through the batch_id=* glob trips
-    # FileStreamSink's has-metadata probe, which WARN-logs a full
-    # java.io.FileNotFoundException stack (bottom frames: the py4j
-    # command loop) even though the read succeeds -- exactly the
-    # truncated stack fragment BENCH_r12.json's tail captured (benign,
-    # rc=0, JSON intact; reproduced locally with stderr split out).
-    # Silence that one logger for the bench process so the driver's
-    # combined-output tail stays clean JSON.
-    jvm = spark._jvm
-    for noisy_logger in (
-        # FileStreamSink's has-metadata probe: set BOTH the Spark 4.x
-        # name (under streaming.sinks -- verified against the bundled
-        # spark-sql jar) and the pre-4.x name so the clean-tail
-        # guarantee survives a Spark up/downgrade (ADVICE r13; setting
-        # a level on a logger name that never logs is harmless).
-        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-        "org.apache.spark.sql.execution.streaming.FileStreamSink",
-        # WindowExec's "No Partition Defined for Window" advisory: the
-        # two fact-sized offenders were re-planned in r14 (q_logprob_
-        # strata, q_win_percent_rank -- the two-pass range-partitioned
-        # rank); the remaining unpartitioned windows are over BOUNDED
-        # relations (range arrays, k-row centroid init, catalog-sized
-        # value tables, TPC-H Q15's aggregated supplier relation) where
-        # the warning is noise, not a scale signal. Suppressed for the
-        # bench process only so the driver's tail stays clean JSON.
-        "org.apache.spark.sql.execution.window.WindowExec",
-    ):
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            noisy_logger, jvm.org.apache.logging.log4j.Level.ERROR
-        )
+    harness.quiet_logs(spark)
+    harness.warm_up(spark, sf_dir)
 
-    def materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # Warm-up: JVM, codegen, parquet footer caches, and the Python/Arrow
-    # worker pool (first pandas_udf call pays worker startup once).
-    materialize(QUERIES["q_agg_group"](spark, sf_dir))
-    materialize(QUERIES["q_cosine_topk"](spark, sf_dir))
-    # Stage the streaming micro-batch files OUTSIDE the timed loop: staging
-    # is test-rig setup (split the static fixture into per-batch parquet
-    # files), not query work, and it re-runs only when the fixture data
-    # generation changes (content-addressed scratch dir). DERIVED from the
-    # headline list so adding a streaming query can't silently push its
-    # staging cost back into the timed loop.
-    from weighted_raster_overlay_service_toolbox_spark.streaming import engine
-
-    staging_of = {
-        "q_stream_tumbling": [(engine.stage_event_files, "tumbling", {})],
-        "q_stream_sliding": [(engine.stage_event_files, "sliding", {})],
-        "q_stream_session": [(engine.stage_with_sentinel, "session", {})],
-        "q_stream_static_join": [(engine.stage_event_files, "static_join", {})],
-        "q_stream_watermark": [
-            (engine.stage_event_files, "watermark", {"n_files": 4, "late_events": 200})
-        ],
-        "q_stream_dedup": [
-            (engine.stage_event_files, "dedup", {"n_files": 4, "late_events": 200})
-        ],
-        "q_stream_agg_update": [(engine.stage_event_files, "agg_update", {})],
-        "q_stream_stateful_custom": [(engine.stage_event_files, "stateful", {})],
-        "q_stream_upsert": [(engine.stage_event_files, "upsert", {})],
-        "q_stream_stream_join": [
-            (engine.stage_event_files, "ss_join", {}),
-            (engine.stage_event_files, "ss_join_b", {}),
-        ],
-        "q_stream_stream_left_join": [
-            (engine.stage_with_sentinel, "ss_left", {}),
-            (engine.stage_with_sentinel, "ss_left_b", {}),
-        ],
-        "q_stream_near_dup": [(engine.stage_document_files, "near_dup", {})],
-        "q_stream_phash_dedup": [
-            (engine.stage_document_files, "phash_dedup", {})
-        ],
-        "q_stream_semantic_decontaminate": [
-            (engine.stage_embedding_files, "sem_decon", {})
-        ],
-        "q_stream_bpe_apply": [
-            (engine.stage_document_files, "bpe_apply", {})
-        ],
-    }
-    for name in headline:
-        if name.startswith("q_stream_"):
-            for fn, variant, kw in staging_of[name]:
-                fn(spark, sf_dir, variant, **kw)
-
-    # Per-query MIN over N repetitions (standard noisy-host methodology):
-    # ambient hypervisor variance on this rig swings identical code 2x+
-    # between runs (PLANS.md round-5 variance note), and the minimum is
-    # the estimator least contaminated by external scheduler noise while
-    # still measuring real end-to-end execution. Override with
-    # SPARK_GRAFT_BENCH_REPEATS=1 for the old single-shot behavior.
-    # Default raised 2 -> 3 in round 7 (VERDICT r6 'Next round' #5):
-    # with min-of-2, untouched queries still drifted 1.3-1.7x between
-    # rounds and swamped real deltas.
+    # Per-query MIN over N repetitions: host noise swings identical code
+    # 2x+ between runs (PLANS.md round-5 variance note), and the minimum
+    # is the estimator least contaminated by it. With min-of-2, untouched
+    # queries still drifted 1.3-1.7x between rounds, hence 3.
     try:
         repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     except ValueError:
         repeats = 3
 
-    # Host-drift sentinel (round 7): q_join_inner's code is untouched
-    # since round 1, so its min-of-5 here -- cold session, same position
-    # every round -- measures THE HOST, not the repo. Cross-round readers
-    # divide any per-query delta by the sentinel ratio before calling it
-    # a regression -- e.g. r5->r6's "q_tpch_q1 1.74x slower" was pure
-    # drift that this field would have normalized away.
-    sentinel_name = "q_join_inner"
-    sentinel_best = float("inf")
-    for _ in range(max(repeats, 5)):
-        t0 = time.perf_counter()
-        materialize(QUERIES[sentinel_name](spark, sf_dir))
-        sentinel_best = min(sentinel_best, time.perf_counter() - t0)
+    sentinel_sec = harness.sentinel(spark, sf_dir, repeats)
 
-    # Memo honesty (round 15, VERDICT r14 "What's wrong" #1): the
-    # registry keeps session-scoped TRAINING memos (_BPE_TRAIN_MEMO,
-    # _PQ_TRAIN_MEMO) so that several registry rows sharing one
-    # deterministic training leg train it once per process. Correct for
-    # parity sweeps, but under min-of-N it made the rows whose DECLARED
-    # work *is* training time memo-warm serving from rep 2 on. Every rep
-    # of a train-declaring row now clears its memo first, so q_bpe_train
-    # includes the 8 merge rounds and the four PQ/ANN rows include
-    # codebook training in EVERY rep (their r15 numbers are therefore
-    # expected to sit above the r14 memo-warm ones -- a measurement fix,
-    # not a regression). Apply-only rows (q_bpe_apply,
+    # A row that declares trains= retrains in EVERY rep, so its min
+    # includes the training its declared work is (the memo would serve
+    # it warm from rep 2 on). Apply-only rows (q_bpe_apply,
     # q_stream_bpe_apply) keep the memo-warm serving path: tokenizing
-    # with an already-trained vocabulary is their declared measurement,
-    # and their warm-min is unchanged from r14 (rep 1 retrains, the min
-    # still comes from warm reps).
-    from weighted_raster_overlay_service_toolbox_spark.queries import (
-        llm as _llm_queries,
-    )
-
-    memo_cleared_rows = {
-        "q_bpe_train": (_llm_queries._BPE_TRAIN_MEMO,),
-        "q_ann_pq": (_llm_queries._PQ_TRAIN_MEMO,),
-        "q_ann_pq_recall": (_llm_queries._PQ_TRAIN_MEMO,),
-        "q_ann_ivfpq": (_llm_queries._PQ_TRAIN_MEMO,),
-        "q_ann_ivfpq_recall": (_llm_queries._PQ_TRAIN_MEMO,),
-    }
+    # with an already-trained vocabulary is their declared measurement.
+    memo_cleared_rows = [n for n in headline if n in TRAINS]
 
     timings: dict[str, float] = {}
     warm_companions: dict[str, float] = {}
     for name in headline:
-        if name == sentinel_name:
-            # ADVICE r7 #4: the sentinel warm-up made q_join_inner's
-            # headline systematically warmer than every other query's;
-            # reuse the sentinel's own min (same work, honest label)
-            # instead of timing a ninth warmed repetition.
-            timings[name] = round(sentinel_best, 3)
+        if name == harness.SENTINEL:
+            # the sentinel's own min: same work, and a ninth warmed rep
+            # would make this row warmer than every other
+            timings[name] = round(sentinel_sec, 3)
             continue
-        best = float("inf")
-        for _ in range(repeats):
-            for memo in memo_cleared_rows.get(name, ()):
-                memo.clear()
-            t0 = time.perf_counter()
-            materialize(QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        if name in memo_cleared_rows:
-            # continuity companion (published under "warm_companions",
-            # never renames or re-times the main row): the pre-r15
-            # artifacts timed these rows memo-warm from rep 2 on
-            # (min-of-N over a populated training memo), so the main
-            # row's r15 number is not comparable to its r14 number by
-            # construction. <name>_warm preserves the OLD methodology --
-            # min over `repeats` reps with the memo left populated (the
-            # honest loop above just trained it) -- purely so
-            # round-over-round comparisons keep an apples-to-apples
-            # series for the serving path.
-            warm = float("inf")
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                materialize(QUERIES[name](spark, sf_dir))
-                warm = min(warm, time.perf_counter() - t0)
-            warm_companions[f"{name}_warm"] = round(warm, 3)
+        timings[name] = round(
+            harness.time_query(
+                spark, sf_dir, name, repeats, retrain=name in TRAINS
+            ),
+            3,
+        )
+        if name in TRAINS:
+            # continuity companion, kept out of "queries": the same row
+            # with the memo left populated (the loop above just trained
+            # it), the pre-r15 memo-warm methodology of this row's series
+            warm_companions[f"{name}_warm"] = round(
+                harness.time_query(spark, sf_dir, name, repeats), 3
+            )
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     result = {
@@ -328,8 +197,8 @@ def main() -> None:
         # host-drift normalizer: min-of-5 of a query untouched since r1.
         # Cross-round per-query comparisons should be read as
         # (t_new / t_old) / (sentinel_new / sentinel_old).
-        "sentinel_query": sentinel_name,
-        "sentinel_sec": round(sentinel_best, 3),
+        "sentinel_query": harness.SENTINEL,
+        "sentinel_sec": round(sentinel_sec, 3),
         # rows whose training memo is cleared before EVERY rep so their
         # min-of-N includes the declared training leg (r15 measurement
         # fix; r14 and earlier timed these memo-warm from rep 2 on).

@@ -12,13 +12,11 @@ summary JSON the judge can read next to CORRECTNESS_r{N}.json.
 
 Usage: python parity_all.py   (env: SPARK_GRAFT_PARITY_SF_DIR, default
 /root/testdata/sf0.01 -- the same scale factor the driver grades at;
-SPARK_GRAFT_PARITY_THREADS, default 4 -- batch queries run in a thread
-pool against the one shared SparkSession with per-thread DuckDB
-connections, while the q_stream_* family stays SEQUENTIAL: streaming
-queries own session-level machinery -- fixed scratch sinks, stream
-staging, a state-store provider conf window -- that a racing twin could
-corrupt; everything else is a pure read of the fixture tables. ~2.5x
-wall-clock cut at equal coverage, VERDICT r10 #7.)
+SPARK_GRAFT_PARITY_THREADS, default 4). The sweep is ``harness.sweep``:
+batch queries in a thread pool against the one shared SparkSession with
+per-thread DuckDB connections (``harness.per_thread_duck``), the
+q_stream_* family in sequence. The warm-up and the host-drift sentinel
+recorded in the summary are ``harness.warm_up`` / ``harness.sentinel``.
 """
 
 from __future__ import annotations
@@ -35,8 +33,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> int:
-    import duckdb
-
+    import harness
     from tests.parity import compare
     from weighted_raster_overlay_service_toolbox_spark.queries import (
         ORACLES,
@@ -44,29 +41,9 @@ def main() -> int:
     )
     from weighted_raster_overlay_service_toolbox_spark.session import get_spark
 
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = get_spark("parity-all", cpus=int(os.environ.get("TEST_CPUS", "8")))
     n_threads = int(os.environ.get("SPARK_GRAFT_PARITY_THREADS", "4"))
-    _local = threading.local()
-
-    def _duck():
-        # DuckDB connections are not thread-safe; one per worker thread,
-        # each with the same fixture views.
-        con = getattr(_local, "con", None)
-        if con is None:
-            con = duckdb.connect()
-            for name in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings".split()
-            ):
-                con.execute(
-                    f"CREATE VIEW {name} AS"
-                    f" SELECT * FROM '{SF_DIR}/{name}.parquet'"
-                )
-            _local.con = con
-        return con
+    duck = harness.per_thread_duck(SF_DIR)
 
     def run_one(name: str) -> dict:
         fn = QUERIES[name]
@@ -76,7 +53,7 @@ def main() -> int:
             if name in ORACLES:
                 tm: dict = {}
                 problems = compare(
-                    spark, _duck(), fn, ORACLES[name], SF_DIR, timings=tm
+                    spark, duck(), fn, ORACLES[name], SF_DIR, timings=tm
                 )
                 entry["mode"] = "oracle"
                 entry["ok"] = not problems
@@ -101,45 +78,14 @@ def main() -> int:
         # otherwise masquerade as engine cost.
         return entry
 
-    # Host-drift sentinel INSIDE the artifact (VERDICT r12 #9): min-of-5
-    # of the bench sentinel (q_join_inner, code unchanged since r1)
-    # through the same noop sink, measured before the sweep. Cross-round
-    # sweep wall-clocks should be read as (elapsed_new / elapsed_old) /
-    # (sentinel_new / sentinel_old) without cross-referencing PLANS.md
-    # prose.
-    sentinel_name = "q_join_inner"
-    sentinel_best = float("inf")
-    # warm the JVM/codegen/footer caches first (the bench.py discipline)
-    # so the sentinel measures steady-state host speed, not startup
-    QUERIES["q_agg_group"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    for _ in range(5):
-        ts = time.perf_counter()
-        QUERIES[sentinel_name](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        sentinel_best = min(sentinel_best, time.perf_counter() - ts)
+    # host-drift sentinel inside the artifact, measured before the sweep:
+    # read cross-run sweep wall clocks as (elapsed_new / elapsed_old) /
+    # (sentinel_new / sentinel_old)
+    harness.warm_up(spark, SF_DIR)
+    sentinel_sec = harness.sentinel(spark, SF_DIR)
 
     t0 = time.time()
-    results: dict[str, dict] = {}
-    batch_names = [n for n in QUERIES if not n.startswith("q_stream")]
-    stream_names = [n for n in QUERIES if n.startswith("q_stream")]
-    if n_threads > 1:
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
-            for name, entry in zip(
-                batch_names, pool.map(run_one, batch_names)
-            ):
-                results[name] = entry
-    else:
-        for name in batch_names:
-            results[name] = run_one(name)
-    # streaming family: sequential by design (shared scratch sinks,
-    # staged-source reuse, the RocksDB provider conf window)
-    for name in stream_names:
-        results[name] = run_one(name)
-    # restore registry order for the report
-    results = {n: results[n] for n in QUERIES}
+    results = harness.sweep(run_one, QUERIES, threads=n_threads)
 
     oracle = [n for n in results if results[n].get("mode") == "oracle"]
     rows_only = [n for n in results if results[n].get("mode") == "rows_only"]
@@ -153,8 +99,8 @@ def main() -> int:
         "rows_only_pass": sum(results[n]["ok"] for n in rows_only),
         "failed": failed,
         "elapsed_sec": round(time.time() - t0, 1),
-        "sentinel_query": sentinel_name,
-        "sentinel_sec": round(sentinel_best, 3),
+        "sentinel_query": harness.SENTINEL,
+        "sentinel_sec": round(sentinel_sec, 3),
         "slowest_20_spark": sorted(
             ((n, e.get("spark_sec", 0.0)) for n, e in results.items()),
             key=lambda kv: -kv[1],

@@ -8,8 +8,9 @@ per-decade ratio a tracked artifact like bench.py's wall-clock. It
   entity-resolution regime pair),
 - runs the scaling probe set at sf0.1 and sf1r (min-of-3 since r12 --
   SCALING_r11's sentinel moved 2.4x on identical code vs r10's 1.96x,
-  so min-of-2 was not pinning the host floor; warm session, noop sink
-  -- same timing discipline as bench.py),
+  so min-of-2 was not pinning the host floor) through bench.py's
+  harness (``harness.py``: warm-up, declared stream inputs staged
+  outside the timer, noop sink, min-of-N),
 - runs q_entity_resolution ALSO at sf1rg (grown name pools), because its
   cost is a DATA-regime property: fixed-name pools grow blocks linearly
   (the driver fixture's convention), grown pools keep the block-size
@@ -32,17 +33,17 @@ cross-round ratio deltas normalized by the sentinel's own drift.
 Between-probe storage cleanup (round 14, VERDICT r13 #4): every probe
 now runs against CLEAN executor storage -- persistent RDD blocks
 (accumulated non-eager localCheckpoint pins from earlier probes) are
-unpersisted, the SQL cache cleared, and the PQ training memo dropped
-after each probe. Without this, a late probe that pins corpus-sized
-relations (pagerank's 12M-row edge fan) finds storage memory already
-full and reads its pins from DISK: SCALING_r13 recorded pagerank at
-6.91x in-sweep while the same plan measured 3.2x isolated -- the gap
+unpersisted, the SQL cache cleared, and every declared training memo
+dropped (``registry.reset_training()``) after each probe. Without this,
+a late probe that pins corpus-sized relations (pagerank's 12M-row
+edge fan) finds storage memory already full and reads its pins from
+DISK: SCALING_r13 recorded pagerank at 6.91x in-sweep while the same plan measured 3.2x isolated -- the gap
 was sweep-session storage pressure, not the plan. In-sweep ratios now
 match isolated A/Bs by construction. (The memo drop is what makes the
 blanket unpersist SAFE: a localCheckpointed RDD cannot recompute, so
 any cached DataFrame that survived cleanup would be poisoned -- the
-memo is the only cross-probe holder of such frames, and each probe's
-min-of-3 reps still share it within the probe.)
+memos are the only cross-probe holders of such frames, and each
+probe's min-of-3 reps still share them within the probe.)
 
 Since round 14 the sweep also times the PRODUCT-level number a platform
 team would quote: the full curate_corpus cascade (quality -> repetition
@@ -60,7 +61,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -129,23 +129,15 @@ PROBES = [
 
 def _drop_probe_storage(spark) -> None:
     """Reset executor storage between probes (see module docstring):
-    unpersist every persistent RDD block, clear the SQL cache, drop the
-    PQ training memo (its values reference localCheckpointed RDDs the
-    unpersist just invalidated)."""
-    from weighted_raster_overlay_service_toolbox_spark.queries.llm import (
-        _PQ_TRAIN_MEMO,
+    drop the training memos (their values reference localCheckpointed
+    RDDs the unpersist invalidates), clear the SQL cache, unpersist
+    every persistent RDD block."""
+    from weighted_raster_overlay_service_toolbox_spark.queries.registry import (
+        reset_training,
     )
 
-    _PQ_TRAIN_MEMO.clear()
+    reset_training()
     spark.catalog.clearCache()
-    # unpersisting a localCheckpointed RDD logs a "cannot be recomputed"
-    # WARN per block -- intended here (nothing holds those frames once
-    # the memo is cleared), so silence the logger for the sweep process
-    jvm = spark._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()
 
@@ -229,30 +221,21 @@ def main() -> None:
     _ensure_fixture(SF1R, grow=False)
     _ensure_fixture(SF1RG, grow=True)
 
-    from weighted_raster_overlay_service_toolbox_spark.queries import QUERIES
+    import harness
     from weighted_raster_overlay_service_toolbox_spark.session import get_spark
 
     spark = get_spark("wros-spark-scaling")
+    harness.quiet_logs(spark)
 
+    # full precision out of every timer: the 10x ratio is the artifact's
+    # whole point, and rounding to 2dp first turns sub-0.1s probes into
+    # coarse or None ratios (ADVICE r10). Reported values are rounded at
+    # the presentation edge below.
     def timed(name: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        # full precision OUT of here: the 10x ratio is the artifact's
-        # whole point, and rounding to 2dp first turns sub-0.1s probes
-        # into coarse or None ratios (ADVICE r10). Reported values are
-        # rounded at the presentation edge below.
-        return best
+        return harness.time_query(spark, sf_dir, name, 3)
 
-    # warm-up: JVM/codegen/Arrow pool on both fixtures
     for d in (SF01, SF1R):
-        QUERIES["q_agg_group"](spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        harness.warm_up(spark, d)
 
     queries: dict[str, dict] = {}
     for name in PROBES:
@@ -290,17 +273,12 @@ def main() -> None:
     )
 
     def timed_auto(sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            edges, _ = _mutual_knn_edges(spark, sf_dir, n_planes="auto")
-            edges.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        # full precision OUT of here: the 10x ratio is the artifact's
-        # whole point, and rounding to 2dp first turns sub-0.1s probes
-        # into coarse or None ratios (ADVICE r10). Reported values are
-        # rounded at the presentation edge below.
-        return best
+        return harness.best_of(
+            lambda: harness.materialize(
+                _mutual_knn_edges(spark, sf_dir, n_planes="auto")[0]
+            ),
+            3,
+        )
 
     ka_small, ka_big = timed_auto(SF01), timed_auto(SF1R)
     knn_auto = {
@@ -313,15 +291,11 @@ def main() -> None:
     # end-to-end curate_corpus cascade (round 14, VERDICT r13 #8): the
     # product-level decade ratio. Same min-of-3 / noop-sink discipline.
     def timed_pipeline(sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            _curate_pipeline(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-            _drop_probe_storage(spark)
-        return best
+        return harness.best_of(
+            lambda: harness.materialize(_curate_pipeline(spark, sf_dir)),
+            3,
+            before=lambda: _drop_probe_storage(spark),
+        )
 
     print("[scaling] pipeline_curate_corpus sf0.1 ...", file=sys.stderr, flush=True)
     cp_small = timed_pipeline(SF01)
@@ -343,7 +317,7 @@ def main() -> None:
         "knn_production_auto_planes": knn_auto,
         "pipeline_curate_corpus": pipeline_probe,
         "storage_cleanup": "unpersist+clearCache+memo-drop between probes",
-        "sentinel_query": "q_join_inner",
+        "sentinel_query": harness.SENTINEL,
         "sentinel_ratio": queries["q_join_inner"]["ratio"],
     }
     line = json.dumps(result)

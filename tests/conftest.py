@@ -39,15 +39,8 @@ def job_ids(spark):
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from harness import duck
 
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_ORACLE}/{name}.parquet'"
-        )
+    con = duck(SF_ORACLE)
     yield con
     con.close()

@@ -378,3 +378,94 @@ def test_merge_rows_matches_full_outer_join(spark, tmp_path, current, updates):
     )
     merge_rows(spark, store, upd)
     assert Counter(tuple(r) for r in load_catalog(spark, store).collect()) == want
+
+
+def test_append_and_diff_of_stored_snapshots_run_no_job(spark, tmp_path, job_ids):
+    """Appending a local frame to a stored catalog, and collecting the
+    diff of two stored snapshots, run no Spark job: both work on the
+    collected driver rows (a ``union`` of the two local sides ran one
+    job, the full-outer join of the diff three)."""
+    from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+    from weighted_raster_overlay_service_toolbox_spark.sources.catalog_store import (
+        catalog_diff,
+    )
+
+    schema = "Name string, Title string"
+    path = str(tmp_path / "cat")
+    create_catalog(spark, path)
+    append_rows(spark, path, local_frame(spark, [("a", "A"), ("b", "B")], schema))
+    before = load_catalog(spark, path).collect()
+    more = local_frame(spark, [("c", "C"), ("d", None)], schema)
+    assert job_ids("test-append", lambda: append_rows(spark, path, more)) == []
+    cat = load_catalog(spark, path)
+    assert cat.collect() == before + _aligned_rows(cat, more)
+    replace_catalog(path, cat.filter(F.col("Name") != "b"), keep_history=2)
+    diff = []
+    assert job_ids(
+        "test-diff",
+        lambda: diff.extend(catalog_diff(spark, path, v_from=1, v_to=None).collect()),
+    ) == []
+    assert [(r["Name"], r["change_type"]) for r in diff] == [("b", "delete")]
+
+
+def _aligned_rows(cat, rows):
+    """``rows`` as the catalog's columns, by name, absent ones NULL."""
+    return [
+        tuple(r[c] if c in rows.columns else None for c in cat.columns)
+        for r in rows.collect()
+    ]
+
+
+def _reference_diff(a, b, key="Name"):
+    """The change feed as a full-outer join on the key, the store's
+    former Spark plan: null-safe compare of the non-key columns."""
+    cols = a.columns
+    bb = b.select(
+        F.col(key).alias("_bk"),
+        *[F.col(c).alias(f"_b_{c}") for c in cols if c != key],
+    )
+    j = a.join(bb, a[key] == bb["_bk"], "full_outer")
+    changed = None
+    for c in cols:
+        if c == key:
+            continue
+        ne = ~a[c].eqNullSafe(F.col(f"_b_{c}"))
+        changed = ne if changed is None else (changed | ne)
+    change = (
+        F.when(a[key].isNull(), "insert")
+        .when(F.col("_bk").isNull(), "delete")
+        .when(changed, "update")
+    )
+    return j.select(
+        F.coalesce(a[key], F.col("_bk")).alias(key),
+        change.alias("change_type"),
+        *[F.col(f"_b_{c}").alias(c) for c in cols if c != key],
+    ).filter(F.col("change_type").isNotNull())
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(old=_MERGE_ROWS, new=_MERGE_ROWS)
+def test_catalog_diff_matches_full_outer_join(spark, tmp_path, old, new):
+    """The driver-side diff gives the multiset of rows of the full-outer
+    join it replaced, with NULL keys and values, inserts, deletes,
+    duplicate keys and no-op rewrites (rows equal in both snapshots)."""
+    from collections import Counter
+
+    from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+    from weighted_raster_overlay_service_toolbox_spark.sources.catalog_store import (
+        catalog_diff,
+    )
+
+    schema = "Name string, Title string, Description string"
+    store = str(tmp_path / "diff_ref")
+    create_catalog(spark, store, overwrite=True)
+    append_rows(spark, store, local_frame(spark, old, schema))
+    cat = load_catalog(spark, store)
+    replace_catalog(
+        store, local_frame(spark, new, cat.schema), keep_history=1
+    )
+    a, b = load_catalog(spark, store, version=1), load_catalog(spark, store)
+    want = Counter(tuple(r) for r in _reference_diff(a, b).collect())
+    got = catalog_diff(spark, store, v_from=1, v_to=None).collect()
+    assert Counter(tuple(r) for r in got) == want

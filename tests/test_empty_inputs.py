@@ -13,13 +13,9 @@ import os
 
 import pytest
 
+from harness import TABLES, sweep
 from weighted_raster_overlay_service_toolbox_spark.queries import QUERIES
 from weighted_raster_overlay_service_toolbox_spark.sources import load_table
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -30,7 +26,7 @@ def empty_sf_dir(spark):
     marker = os.path.join(out, "_READY")
     if not os.path.isfile(marker):
         os.makedirs(out, exist_ok=True)
-        for t in _TABLES:
+        for t in TABLES:
             load_table(spark, "/root/testdata/sf0.001", t).limit(0).coalesce(
                 1
             ).write.mode("overwrite").parquet(f"{out}/{t}.parquet")
@@ -40,15 +36,9 @@ def empty_sf_dir(spark):
 
 
 def test_every_query_executes_on_empty_tables(spark, empty_sf_dir):
-    # r15 (VERDICT r14 #4 -- the suite must fit the driver's pytest
-    # budget): batch queries run through the sanctioned 4-thread
-    # in-process pool (the parity_all.py convention); the q_stream_*
-    # family stays SEQUENTIAL because streaming queries own fixed
-    # scratch sinks and a state-store conf window a racing twin could
-    # corrupt. Same coverage, same failure attribution, ~3x less wall
-    # clock on the suite's second-slowest test.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # harness.sweep: batch queries on the 4-thread in-process pool,
+    # q_stream_* in sequence (they own scratch sinks and a state-store
+    # conf window a racing twin could corrupt)
     def run_one(name: str) -> str | None:
         try:
             QUERIES[name](spark, empty_sf_dir).count()
@@ -56,10 +46,5 @@ def test_every_query_executes_on_empty_tables(spark, empty_sf_dir):
         except Exception as e:  # noqa: BLE001 - collecting the full list
             return f"{name}: {str(e).splitlines()[0][:100]}"
 
-    batch = [n for n in QUERIES if not n.startswith("q_stream")]
-    stream = [n for n in QUERIES if n.startswith("q_stream")]
-    fails = []
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fails.extend(r for r in pool.map(run_one, batch) if r)
-    fails.extend(r for r in map(run_one, stream) if r)
+    fails = [r for r in sweep(run_one, QUERIES).values() if r]
     assert not fails, f"{len(fails)} queries fail on empty inputs: {fails[:10]}"

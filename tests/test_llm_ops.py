@@ -195,15 +195,16 @@ def test_kmeans_deterministic_and_improving(spark):
     assert a3.select("cluster").distinct().count() <= 8
 
     def inertia(assigned, centroids):
-        from weighted_raster_overlay_service_toolbox_spark.operators.kmeans import (
-            _sq_dist,
+        from weighted_raster_overlay_service_toolbox_spark.operators.similarity import (
+            dot_expr,
         )
         from pyspark.sql.functions import broadcast
 
+        # |e-ce|^2 by the expanded identity assign_clusters ranks on
+        e, ce = F.col("e"), F.col("ce")
+        sq_dist = dot_expr(e, e) - 2 * dot_expr(e, ce) + dot_expr(ce, ce)
         joined = assigned.join(broadcast(centroids), "cluster")
-        return joined.agg(
-            F.sum(_sq_dist(F.col("e"), F.col("ce"))).alias("j")
-        ).first()["j"]
+        return joined.agg(F.sum(sq_dist).alias("j")).first()["j"]
 
     assert inertia(a3, c3) <= inertia(a1, c1) + 1e-9
 

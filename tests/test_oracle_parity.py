@@ -1,78 +1,41 @@
 """Self-check every declared duckdb-oracle query against DuckDB at sf0.01 --
 a local replica of the driver's t2 gate.
 
-r15 (VERDICT r14 #4 -- the driver's pytest gate must finish inside its
-time budget): the per-query comparisons used to run SEQUENTIALLY, one
-parametrized test at a time, which made this module the single biggest
-wall-clock block of the suite (260+ oracle replays back to back). The
-comparisons now run ONCE in a session-scoped fixture through the same
-4-thread pool parity_all.py has used since round 11 (in-process threads
-against the one shared SparkSession are the sanctioned parallelism;
-separate Spark PROCESSES are what race on .scratch). Each parametrized
-test then asserts its own precomputed result -- identical coverage,
-identical per-query failure attribution, ~3-4x less wall clock. The
-q_stream_* family stays sequential inside the fixture for the same
-reason parity_all keeps it sequential: streaming queries own fixed
-scratch sinks and a state-store conf window a racing twin could corrupt.
+The comparisons run ONCE, in a session-scoped fixture, through
+``harness.sweep`` (the parity_all.py sweep): batch queries on a 4-thread
+pool against the one shared SparkSession with per-thread DuckDB
+connections, the q_stream_* family in sequence, since streaming queries
+own scratch sinks and a state-store conf window a racing twin could
+corrupt. Each parametrized test then asserts its own precomputed
+result: one test per oracle, with per-query failure attribution.
 """
 
 from __future__ import annotations
 
-import threading
 import traceback
-from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
+from harness import per_thread_duck, sweep
 from weighted_raster_overlay_service_toolbox_spark.queries import ORACLES, QUERIES
 
 from .conftest import SF_ORACLE
 from .parity import compare
-
-_N_THREADS = 4
 
 
 @pytest.fixture(scope="session")
 def parity_results(spark):
     """{query name: list of problem strings (empty == parity)} for every
     oracle-backed query, computed once for the whole session."""
-    import duckdb
-
-    _local = threading.local()
-
-    def _duck():
-        # DuckDB connections are not thread-safe; one per worker thread.
-        con = getattr(_local, "con", None)
-        if con is None:
-            con = duckdb.connect()
-            for name in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings".split()
-            ):
-                con.execute(
-                    f"CREATE VIEW {name} AS"
-                    f" SELECT * FROM '{SF_ORACLE}/{name}.parquet'"
-                )
-            _local.con = con
-        return con
+    duck = per_thread_duck(SF_ORACLE)
 
     def run_one(name: str) -> list[str]:
         try:
-            return compare(
-                spark, _duck(), QUERIES[name], ORACLES[name], SF_ORACLE
-            )
+            return compare(spark, duck(), QUERIES[name], ORACLES[name], SF_ORACLE)
         except Exception:
             return [traceback.format_exc(limit=3)]
 
-    batch = [n for n in sorted(ORACLES) if not n.startswith("q_stream")]
-    stream = [n for n in sorted(ORACLES) if n.startswith("q_stream")]
-    results: dict[str, list[str]] = {}
-    with ThreadPoolExecutor(max_workers=_N_THREADS) as pool:
-        for name, problems in zip(batch, pool.map(run_one, batch)):
-            results[name] = problems
-    for name in stream:
-        results[name] = run_one(name)
-    return results
+    return sweep(run_one, sorted(ORACLES))
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -83,18 +46,10 @@ def test_parity(name, parity_results):
 
 def test_every_query_runs(spark):
     """Rows-only queries (no oracle) must at least execute and return
-    rows. Threaded like the fixture above (pure fixture-table reads; no
-    rows-only query is a q_stream_* row, asserted below so a future
-    streaming rows-only registration cannot silently race)."""
-    names = [n for n in QUERIES if n not in ORACLES]
-    assert not [n for n in names if n.startswith("q_stream")], (
-        "rows-only q_stream_* query registered: move it to the "
-        "sequential lane before threading it here"
+    rows."""
+    counts = sweep(
+        lambda name: QUERIES[name](spark, SF_ORACLE).count(),
+        [n for n in QUERIES if n not in ORACLES],
     )
-
-    def run_one(name: str) -> int:
-        return QUERIES[name](spark, SF_ORACLE).count()
-
-    with ThreadPoolExecutor(max_workers=_N_THREADS) as pool:
-        for name, n in zip(names, pool.map(run_one, names)):
-            assert n >= 0, name
+    for name, n in counts.items():
+        assert n >= 0, name

@@ -205,23 +205,18 @@ CHECKPOINTED_ALLOWED = {
 
 
 def test_python_non_equi_and_checkpoint_shapes_are_allowlisted(spark):
-    # r15 (VERDICT r14 #4): batch-query plans are built through the
-    # sanctioned 4-thread in-process pool; q_stream_* stay sequential
-    # (streaming queries EXECUTE during construction against the shared
-    # scratch sinks -- the module docstring's coverage caveat -- and a
-    # racing twin could corrupt them).
-    from concurrent.futures import ThreadPoolExecutor
+    # harness.sweep: batch plans on the 4-thread in-process pool,
+    # q_stream_* in sequence (streaming queries EXECUTE during
+    # construction against their scratch sinks -- the module docstring's
+    # coverage caveat -- and a racing twin could corrupt them)
+    from harness import sweep
 
-    def audit_one(name: str) -> tuple[str, dict]:
-        return name, audit_plan(formatted_plan(QUERIES[name](spark, SF_SMOKE)))
-
-    batch = [n for n in QUERIES if not n.startswith("q_stream")]
-    stream = [n for n in QUERIES if n.startswith("q_stream")]
+    audits = sweep(
+        lambda name: audit_plan(formatted_plan(QUERIES[name](spark, SF_SMOKE))),
+        QUERIES,
+    )
     python_eval, non_equi, checkpointed = set(), set(), set()
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        audits = list(pool.map(audit_one, batch))
-    audits.extend(audit_one(n) for n in stream)
-    for name, a in audits:
+    for name, a in audits.items():
         if a["python_eval"]:
             python_eval.add(name)
         if a["non_equi_join"]:

@@ -63,18 +63,16 @@ def test_oracle_backed_outputs_are_driver_hashable(spark):
     fails BEFORE the driver does on any future unserialized query."""
     from pyspark.sql import types as T
 
+    from harness import sweep
     from .conftest import SF_ORACLE
     import __spark_entry__ as e
 
     q, o = e.queries(), e.oracle_sql()
 
-    # r15 (VERDICT r14 #4): batch queries resolve their schemas through
-    # the sanctioned 4-thread in-process pool; q_stream_* stay
-    # sequential (constructing a streaming query RUNS its micro-batch
-    # pipeline against the shared scratch sinks -- most of this test's
-    # wall clock -- and a racing twin could corrupt them).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # harness.sweep: batch schemas on the 4-thread in-process pool,
+    # q_stream_* in sequence (constructing a streaming query RUNS its
+    # micro-batch pipeline against its scratch sinks, most of this
+    # test's wall clock, and a racing twin could corrupt them)
     def bad_fields(name: str) -> list[str]:
         schema = q[name](spark, SF_ORACLE).schema
         return [
@@ -86,14 +84,7 @@ def test_oracle_backed_outputs_are_driver_hashable(spark):
             )
         ]
 
-    batch = [n for n in o if not n.startswith("q_stream")]
-    stream = [n for n in o if n.startswith("q_stream")]
-    bad: list[str] = []
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for found in pool.map(bad_fields, batch):
-            bad.extend(found)
-    for name in stream:
-        bad.extend(bad_fields(name))
+    bad = [b for found in sweep(bad_fields, o).values() for b in found]
     assert not bad, f"driver-unhashable output columns: {bad}"
 
 

@@ -13,6 +13,26 @@ from weighted_raster_overlay_service_toolbox_spark.sources import load_table
 from .conftest import SF_SMOKE
 
 
+def run_foreach_batch(streaming_df, output_mode: str) -> list:
+    """Execute with foreachBatch, returning [(batch_id, rows)]: the
+    per-micro-batch emission log, collected to the driver, for golden
+    checks on bounded fixtures. Registry queries capture through
+    ``engine.run_to_parquet_log`` instead."""
+    captured: list = []
+
+    def sink(batch_df, batch_id: int) -> None:
+        captured.append((batch_id, batch_df.collect()))
+
+    q = (
+        streaming_df.writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return captured
+
+
 def test_staging_prunes_stale_fingerprint_dirs(spark):
     """A staged dir from a previous fixture generation (same name/params
     prefix, different source fingerprint) must be removed by the next
@@ -297,7 +317,7 @@ def test_stream_near_dup_suppresses_across_batches_deterministically(spark):
 
 def test_no_registry_streaming_row_collects_batches():
     """Posture pin (round 13, VERDICT r12 #2): the collect-based
-    emission capture (engine.run_foreach_batch) is a TEST-ONLY harness.
+    emission capture (run_foreach_batch, above) is a TEST-ONLY harness.
     Every registry streaming query must capture executor-side -- memory
     sink for bounded finalized-window outputs, run_to_parquet_log /
     run_near_dup_ingest's batch_id-partitioned parquet sink for
@@ -321,11 +341,12 @@ def test_run_to_parquet_log_matches_collect_capture_and_is_rerunnable(spark):
     so the availableNow replay is deterministic end to end)."""
     import os
 
+    from weighted_raster_overlay_service_toolbox_spark.queries.registry import (
+        staged_inputs,
+    )
     from weighted_raster_overlay_service_toolbox_spark.streaming.engine import (
         read_event_stream,
-        run_foreach_batch,
         run_to_parquet_log,
-        stage_event_files,
     )
     from weighted_raster_overlay_service_toolbox_spark.queries.streaming import (
         _emission_scratch,
@@ -333,7 +354,7 @@ def test_run_to_parquet_log_matches_collect_capture_and_is_rerunnable(spark):
     from .conftest import SF_SMOKE
     from pyspark.sql import functions as F
 
-    staged = stage_event_files(spark, SF_SMOKE, "agg_update")
+    (staged,) = staged_inputs(spark, SF_SMOKE, "q_stream_agg_update")
 
     def agg():
         return (

@@ -44,14 +44,6 @@ def quantize_vec(e) -> F.Column:
     return F.transform(e, lambda x: duck_round(x * _Q) / F.lit(float(_Q)))
 
 
-def _sq_dist(a, b) -> F.Column:
-    """|a-b|^2 via the expanded identity (NOT a fold of squared diffs:
-    the identity is what the oracle can replicate with dot products).
-    Pairwise form for one-off use; assign_clusters hoists the two
-    self-dots out of the k-way join -- see there."""
-    return dot_expr(a, a) - 2 * dot_expr(a, b) + dot_expr(b, b)
-
-
 def assign_clusters(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, e) x (cluster, ce) -> (vec_id, e, cluster) by nearest
     centroid, cluster-id tiebreak.

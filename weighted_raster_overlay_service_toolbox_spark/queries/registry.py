@@ -11,34 +11,77 @@ that keep those hashes stable across engines:
   engines (double summation order differs between Spark and DuckDB; decimal
   arithmetic does not), then ROUND(_, 2) and cast back to DOUBLE;
 - every LIMIT carries a unique-key tiebreak.
+
+A registration is also the one declaration of what a query needs in
+order to run (``stage=``, ``trains=``): the runners in ``harness.py`` and
+the tests read it from here instead of keeping their own maps.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, MutableMapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+#: name -> the stream inputs the query reads, each ``(kind, variant,
+#: kwargs)`` with ``kind`` a key of ``streaming.engine.STAGERS``.
+STAGES: dict[str, tuple[tuple[str, str, dict], ...]] = {}
+#: name -> the session training memo its declared work trains into.
+TRAINS: dict[str, MutableMapping] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(
+    name: str,
+    oracle: str | None = None,
+    stage: tuple[tuple[str, str, dict], ...] = (),
+    trains: MutableMapping | None = None,
+):
     """Decorator: register ``fn`` as declared query ``name``.
 
     ``oracle`` is DuckDB SQL (tables pre-registered as views); ``None``
     means the driver records a weaker rows-only check (reserved for ops
     that are genuinely not SQL-expressible, per SURVEY.md section 2.2).
+
+    ``stage`` declares a streaming query's staged inputs; the query and
+    every runner get the dirs from :func:`staged_inputs`, so a runner can
+    stage them outside a timed region. ``trains`` is the memo the
+    query's declared work trains into; :func:`reset_training` clears it
+    so a timing includes the training.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if stage:
+            STAGES[name] = stage
+        if trains is not None:
+            TRAINS[name] = trains
         return fn
 
     return deco
+
+
+def staged_inputs(spark: SparkSession, sf_dir: str, name: str) -> list[str]:
+    """The staged dirs of ``name``'s declared stream inputs, in
+    declaration order (content-addressed and reused, so a second call
+    writes nothing); empty for a query that declares none."""
+    from ..streaming.engine import STAGERS
+
+    return [
+        STAGERS[kind](spark, sf_dir, variant, **kwargs)
+        for kind, variant, kwargs in STAGES.get(name, ())
+    ]
+
+
+def reset_training(name: str | None = None) -> None:
+    """Clear the training memo ``name`` declares (every declared memo
+    when ``name`` is None), so its next run trains again."""
+    for memo in TRAINS.values() if name is None else [TRAINS.get(name, {})]:
+        memo.clear()
 
 
 # --- determinism helpers (Spark side) -------------------------------------

@@ -33,14 +33,10 @@ from ..streaming.engine import (
     read_event_stream,
     run_to_memory,
     run_to_parquet_log,
-    stage_document_files,
-    stage_embedding_files,
-    stage_event_files,
-    stage_with_sentinel,
 )
 from ..functions.langmix import LANG_MIX_ORACLE
 from .llm import _bpe_apply_oracle, qc_oracle_cte
-from .registry import query
+from .registry import query, staged_inputs
 
 
 def _emission_scratch(name: str) -> tuple[str, str]:
@@ -66,6 +62,7 @@ def _emission_scratch(name: str) -> tuple[str, str]:
     FROM events
     GROUP BY 1, 2
     """,
+    stage=(("events", "tumbling", {}),),
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling window counts/sums, run as a real stream (complete
@@ -77,7 +74,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches), at half the per-batch state-store/commit overhead
     (A/B at sf0.1: 2.31s -> 1.26s). Sequencing-sensitive queries
     (watermark/dedup) keep 1."""
-    staged = stage_event_files(spark, sf_dir, "tumbling")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_tumbling")
     agg = (
         read_event_stream(spark, staged, files_per_trigger=2)
         .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -119,12 +116,13 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned
     GROUP BY 1, 2
     """,
+    stage=(("events", "sliding", {}),),
 )
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour window sliding every 30 minutes (each event lands in 2
     windows), real stream in complete mode. The oracle assigns each event
     to its two covering windows explicitly."""
-    staged = stage_event_files(spark, sf_dir, "sliding")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_sliding")
     agg = (
         read_event_stream(spark, staged)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
@@ -168,6 +166,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grp
     GROUP BY user_id, session_id
     """,
+    stage=(("events_sentinel", "session", {}),),
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (5-minute gap per user) as a REAL stream: stateful
@@ -176,7 +175,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     every real session so the finite stream flushes all state (sessions
     only emit once the watermark passes their end). Oracle is the classic
     gaps-and-islands rewrite."""
-    staged = stage_with_sentinel(spark, sf_dir, "session")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_session")
     agg = (
         read_event_stream(spark, staged)
         .withWatermark("ts", "1 minute")
@@ -204,6 +203,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2, 3
     """,
+    stage=(("events", "static_join", {}),),
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join: each micro-batch joins the event
@@ -217,7 +217,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     r4-advice OOM hazard. Size-based planning still broadcasts it at
     every test scale (parquet stats < autoBroadcastJoinThreshold) and
     falls back to a shuffled join when the dim outgrows the limit."""
-    staged = stage_event_files(spark, sf_dir, "static_join")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_static_join")
     ev = read_event_stream(spark, staged)
     # the static side must resolve in the SAME session as the stream
     # (read_event_stream runs on the private stream-session clone)
@@ -260,6 +260,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND date_trunc('hour', ts) + INTERVAL 1 HOUR <= m - INTERVAL 10 MINUTE
     GROUP BY 1, 2
     """,
+    stage=(("events", "watermark", {"n_files": 4, "late_events": 200}),),
 )
 def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data drop beyond a 10-minute watermark: the 200 earliest
@@ -276,7 +277,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier; later windows stay in unemitted state in append mode).
     Matching this oracle pins both the exact drop SET and the exact
     finalization frontier, verified at sf0.001 and sf0.01."""
-    staged = stage_event_files(spark, sf_dir, "watermark", n_files=4, late_events=200)
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_watermark")
     agg = (
         read_event_stream(spark, staged)
         .withWatermark("ts", "10 minutes")
@@ -307,6 +308,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND date_trunc('hour', ts) + INTERVAL 1 HOUR <= m - INTERVAL 10 MINUTE
     GROUP BY 1, 2
     """,
+    stage=(("events", "dedup", {"n_files": 4, "late_events": 200}),),
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dropDuplicates on event_id within a 10-minute
@@ -323,7 +325,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-drop (late row reaching state) breaks the hash. The
     duplicate-suppression half of the operator is pinned separately in
     tests/test_streaming.py."""
-    staged = stage_event_files(spark, sf_dir, "dedup", n_files=4, late_events=200)
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_dedup")
     deduped = (
         read_event_stream(spark, staged)
         .withWatermark("ts", "10 minutes")
@@ -363,6 +365,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY batch_id) AS BIGINT) AS n
     FROM c
     """,
+    stage=(("events", "agg_update", {}),),
 )
 def q_stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Update-mode stateful running aggregate: per event_type counts,
@@ -382,7 +385,7 @@ def q_stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract) and read back for the compare; at 100x the update-mode
     log is key-cardinality-sized per batch and never touches the
     driver."""
-    staged = stage_event_files(spark, sf_dir, "agg_update")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_agg_update")
     agg = (
         read_event_stream(spark, staged)
         .groupBy("event_type")
@@ -422,6 +425,7 @@ def q_stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pb
     WINDOW w AS (PARTITION BY user_id ORDER BY batch_id)
     """,
+    stage=(("events", "stateful", {}),),
 )
 def q_stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
@@ -464,7 +468,7 @@ def q_stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    staged = stage_event_files(spark, sf_dir, "stateful")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_stateful_custom")
     out = (
         read_event_stream(spark, staged)
         .groupBy("user_id")
@@ -496,6 +500,7 @@ def q_stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
     WHERE a.event_type = 'click' AND b.event_type = 'purchase'
     """,
+    stage=(("events", "ss_join", {}), ("events", "ss_join_b", {})),
 )
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM inner join: clicks joined to purchases by the same
@@ -517,7 +522,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch execution of the same join shape is exercised by
     q_stream_stream_left_join at files_per_trigger=1; the
     sequencing-sensitive queries (watermark/dedup) also keep 1."""
-    staged = stage_event_files(spark, sf_dir, "ss_join")
+    staged, staged2 = staged_inputs(spark, sf_dir, "q_stream_stream_join")
     ev = read_event_stream(spark, staged, files_per_trigger=4)
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -528,7 +533,6 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("click_ts", "2 hours")
     )
-    staged2 = stage_event_files(spark, sf_dir, "ss_join_b")
     purchases = (
         read_event_stream(spark, staged2, files_per_trigger=4)
         .filter(F.col("event_type") == "purchase")
@@ -565,6 +569,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            value AS last_value
     FROM r WHERE rn = 1
     """,
+    stage=(("events", "upsert", {}),),
 )
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming UPSERT sink via ``foreachBatch``: each micro-batch
@@ -601,7 +606,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(scratch + ".old", ignore_errors=True)
     os.makedirs(os.path.dirname(scratch), exist_ok=True)
 
-    staged = stage_event_files(spark, sf_dir, "upsert")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_upsert")
     stream = read_event_stream(spark, staged)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -645,6 +650,10 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
     WHERE a.event_type = 'click'
     """,
+    stage=(
+        ("events_sentinel", "ss_left", {}),
+        ("events_sentinel", "ss_left_b", {}),
+    ),
 )
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join: every click emits -- matched rows
@@ -666,7 +675,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first would leave the tail of the stream behind the watermark and
     # its unmatched rows would never emit); it joins nothing (user_id=-1)
     # and is dropped from the output.
-    staged = stage_with_sentinel(spark, sf_dir, "ss_left")
+    staged, staged2 = staged_inputs(spark, sf_dir, "q_stream_stream_left_join")
     clicks = (
         read_event_stream(spark, staged)
         .filter(F.col("event_type").isin("click", "sentinel"))
@@ -677,7 +686,6 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("click_ts", "30 minutes")
     )
-    staged2 = stage_with_sentinel(spark, sf_dir, "ss_left_b")
     purchases = (
         read_event_stream(spark, staged2)
         .filter(F.col("event_type").isin("purchase", "sentinel"))
@@ -720,6 +728,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM z
     WHERE ROUND(1.0 / (1.0 + exp(-z)), 4) >= 0.5
     """,
+    stage=(("documents", "quality_filter", {}),),
 )
 def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME quality filtering (round 7): the documents table
@@ -743,7 +752,7 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention of the batch-invariant queries."""
     from .llm import quality_classifier_score
 
-    staged = stage_document_files(spark, sf_dir, "quality_filter")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_quality_filter")
     score = quality_classifier_score()
     filtered = (
         read_document_stream(spark, staged, files_per_trigger=2)
@@ -760,6 +769,7 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (functions/langmix.py, ADVICE r8) -- batch==stream by construction
     # for a complete-mode aggregate over a drained source
     oracle=LANG_MIX_ORACLE,
+    stage=(("documents", "lang_mix", {}),),
 )
 def q_stream_lang_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME language-mix monitoring (round 8): the stream
@@ -781,7 +791,7 @@ def q_stream_lang_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy pass is source-cardinality work. files_per_trigger=2:
     complete-mode output is batch-count-invariant (the tumbling-window
     convention), so backfill halves the per-batch commit overhead."""
-    staged = stage_document_files(spark, sf_dir, "lang_mix")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_lang_mix")
     counts = (
         read_document_stream(spark, staged, files_per_trigger=2)
         .groupBy("source", "lang")
@@ -857,9 +867,15 @@ def _stream_near_dup_oracle(k: int = 16, bands: int = 8, n_files: int = 4) -> st
 
 
 _SND_K, _SND_BANDS = 16, 8
+#: the near-dup ingest stream, shared by the continuous and compacted runs
+_SND_STAGE = (("documents", "near_dup", {}),)
 
 
-@query("q_stream_near_dup", oracle=_stream_near_dup_oracle(_SND_K, _SND_BANDS))
+@query(
+    "q_stream_near_dup",
+    oracle=_stream_near_dup_oracle(_SND_K, _SND_BANDS),
+    stage=_SND_STAGE,
+)
 def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME near-duplicate suppression (round 10; production
     posture round 11, VERDICT r10 #3): the corpus arrives as document
@@ -915,7 +931,7 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(sink_dir, ignore_errors=True)
     shutil.rmtree(ckpt_dir, ignore_errors=True)
 
-    staged = stage_document_files(spark, sf_dir, "near_dup")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_near_dup")
     docs = read_document_stream(spark, staged, files_per_trigger=1)
     keys = near_dup_band_keys(docs, TOKS(), k=_SND_K, bands=_SND_BANDS)
     return run_near_dup_ingest(
@@ -926,6 +942,7 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stream_near_dup_compact",
     oracle=_stream_near_dup_oracle(_SND_K, _SND_BANDS),
+    stage=_SND_STAGE,
 )
 def q_stream_near_dup_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_stream_near_dup with a STATE-COMPACTION boundary in the middle
@@ -969,7 +986,7 @@ def q_stream_near_dup_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(base, ignore_errors=True)
 
-    staged = stage_document_files(spark, sf_dir, "near_dup")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_near_dup_compact")
     parts = sorted(glob.glob(os.path.join(staged, "batch_*.parquet")))
     n_a = len(parts) // 2
     half_a = os.path.join(base, "a")
@@ -1083,7 +1100,11 @@ def _stream_phash_dedup_oracle(n_files: int = 4) -> str:
     """
 
 
-@query("q_stream_phash_dedup", oracle=_stream_phash_dedup_oracle())
+@query(
+    "q_stream_phash_dedup",
+    oracle=_stream_phash_dedup_oracle(),
+    stage=(("documents", "phash_dedup", {}),),
+)
 def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME perceptual image dedup (round 12): the streaming form
     of q_multimodal_phash_dedup, composing the image modality with the
@@ -1126,7 +1147,7 @@ def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(sink_dir, ignore_errors=True)
     shutil.rmtree(ckpt_dir, ignore_errors=True)
 
-    staged = stage_document_files(spark, sf_dir, "phash_dedup")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_phash_dedup")
     docs = read_document_stream(spark, staged, files_per_trigger=1).select(
         "doc_id",
         "text",
@@ -1167,6 +1188,7 @@ def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * sqrt(list_dot_product(ev.ee, ev.ee))), 4) >= 0.35
     )
     """,
+    stage=(("embeddings", "sem_decon", {}),),
 )
 def q_stream_semantic_decontaminate(
     spark: SparkSession, sf_dir: str
@@ -1206,7 +1228,7 @@ def q_stream_semantic_decontaminate(
         eval_suite_of,
     )
 
-    staged = stage_embedding_files(spark, sf_dir, "sem_decon")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_semantic_decontaminate")
     stream = read_embedding_stream(spark, staged, files_per_trigger=2)
     ss = stream.sparkSession
     evid = (
@@ -1238,7 +1260,11 @@ def q_stream_semantic_decontaminate(
 # oracle: q_bpe_apply's batch SQL VERBATIM (_bpe_apply_oracle) -- the
 # stream is stateless per row, so its drained output equals the batch
 # answer exactly (the qc_oracle_cte / LANG_MIX_ORACLE sharing convention)
-@query("q_stream_bpe_apply", oracle=_bpe_apply_oracle())
+@query(
+    "q_stream_bpe_apply",
+    oracle=_bpe_apply_oracle(),
+    stage=(("documents", "bpe_apply", {}),),
+)
 def q_stream_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME BPE tokenization (round 14): the documents table
     replayed as a deterministic file stream, each arriving document
@@ -1279,7 +1305,7 @@ def q_stream_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         state = bpe_merge_fold_sql(state, _bpe_lit(left), _bpe_lit(right))
     nps = f"transform(split(text, ' '), t -> size(split({state}, chr(31))))"
 
-    staged = stage_document_files(spark, sf_dir, "bpe_apply")
+    (staged,) = staged_inputs(spark, sf_dir, "q_stream_bpe_apply")
     docs = read_document_stream(spark, staged, files_per_trigger=2)
     out = (
         docs.select("doc_id", F.expr(nps).alias("nps"))

@@ -199,9 +199,12 @@ def append_rows(spark: SparkSession, path: str, rows: DataFrame) -> None:
     """R5 bulk load (``AddRastersToMosaicDataset``, ``.pyt:842``): align
     to the catalog schema by name, fill absent columns with NULL. The
     append is a :func:`replace_catalog` of the current rows plus the new
-    ones, so the store has one write path."""
+    ones, so the store has one write path. Both sides are collected and
+    rebuilt as one local frame: Spark folds no Union of LocalRelations,
+    so a ``union`` of two jobless sides would run a job."""
     cat = load_catalog(spark, path)
-    replace_catalog(path, cat.union(_aligned(cat, rows)))
+    added = cat.collect() + _aligned(cat, rows).collect()
+    replace_catalog(path, local_frame(spark, added, cat.schema))
 
 
 def merge_rows(
@@ -240,35 +243,50 @@ def catalog_diff(
     key: str = "Name",
 ) -> DataFrame:
     """Change data feed between two snapshots (``None`` = live): one row
-    per changed key with ``change_type`` insert/update/delete. A
-    full-outer join on the key; an update is any key present in both
-    whose non-key columns differ (null-safe compare). The row-level diff
-    a downstream incremental consumer replays instead of re-reading the
-    whole table."""
+    per changed key with ``change_type`` insert/update/delete and the
+    ``v_to`` values (NULL for a delete). The rows are those of a
+    full-outer join on the key, computed over the two collected
+    snapshots: an update is any key present in both whose non-key
+    columns differ (null-safe compare), and a NULL key matches nothing,
+    so it reads as an insert. The row-level diff a downstream
+    incremental consumer replays instead of re-reading the whole
+    table."""
     a = load_catalog(spark, path, version=v_from)
     b = load_catalog(spark, path, version=v_to)
-    cols = a.columns
-    bb = b.select(
-        F.col(key).alias("_bk"),
-        *[F.col(c).alias(f"_b_{c}") for c in cols if c != key],
+    vals = [c for c in a.columns if c != key]
+    old, new = a.collect(), b.collect()
+    by_key: dict = {}
+    for r in new:
+        if r[key] is not None:
+            by_key.setdefault(r[key], []).append(r)
+    out = []
+    for r in old:
+        if r[key] is None:
+            out.append((None, "insert", *[None] * len(vals)))
+        elif r[key] not in by_key:
+            out.append((r[key], "delete", *[None] * len(vals)))
+        else:
+            out += [
+                (r[key], "update", *[n[c] for c in vals])
+                for n in by_key[r[key]]
+                if any(not _same(r[c], n[c]) for c in vals)
+            ]
+    have = {r[key] for r in old}
+    out += [
+        (r[key], "insert", *[r[c] for c in vals])
+        for r in new
+        if r[key] is None or r[key] not in have
+    ]
+    schema = StructType(
+        [b.schema[key], StructField("change_type", StringType())]
+        + [b.schema[c] for c in vals]
     )
-    j = a.join(bb, a[key] == bb["_bk"], "full_outer")
-    changed = None
-    for c in cols:
-        if c == key:
-            continue
-        ne = ~a[c].eqNullSafe(F.col(f"_b_{c}"))
-        changed = ne if changed is None else (changed | ne)
-    change = (
-        F.when(a[key].isNull(), "insert")
-        .when(F.col("_bk").isNull(), "delete")
-        .when(changed, "update")
-    )
-    return j.select(
-        F.coalesce(a[key], F.col("_bk")).alias(key),
-        change.alias("change_type"),
-        *[F.col(f"_b_{c}").alias(c) for c in cols if c != key],
-    ).filter(F.col("change_type").isNotNull())
+    return local_frame(spark, out, schema)
+
+
+def _same(x, y) -> bool:
+    """Spark's null-safe equality: NULL equals NULL, NaN equals NaN."""
+    return x == y or (x != x and y != y)
 
 
 def replace_catalog(

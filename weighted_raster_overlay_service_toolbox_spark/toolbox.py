@@ -48,14 +48,6 @@ from .functions.ranges import (
 )
 from .session import local_frame
 
-#: catalog columns added by DDL in the reference (``.pyt:592-603``) plus
-#: the mosaic's system Name key.
-CATALOG_COLUMNS = [
-    "Name", "Title", "Description", "Url", "InputRanges", "NoDataRanges",
-    "RangeLabels", "NoDataRangeLabels", "OutputValues", "Metadata",
-    "dataset_id",
-]
-
 #: dataset-name characters the reference rejects (``.pyt:677-681``).
 _BAD_NAME_CHARS = r"[ ~`!@#$%^&*(){}\[\]\-+=<>,.?|]"
 
