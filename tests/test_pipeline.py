@@ -1,8 +1,33 @@
-"""curate_corpus: one doc dropped per stage, precedence, stats totals."""
+"""curate_corpus: one doc dropped per stage, precedence, stats totals,
+and the flag cascade against the aggregate-and-join-back reference."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from weighted_raster_overlay_service_toolbox_spark.functions.rounding import (
+    duck_round,
+)
+from weighted_raster_overlay_service_toolbox_spark.operators.dedup import (
+    minhash_candidates,
+)
+from weighted_raster_overlay_service_toolbox_spark.operators.graph import (
+    connected_components,
+)
+from weighted_raster_overlay_service_toolbox_spark.operators.text import (
+    fingerprint,
+    repetition_features,
+    tokens_of,
+    word_ngrams_from_tokens,
+)
 from weighted_raster_overlay_service_toolbox_spark.pipeline import curate_corpus
+from weighted_raster_overlay_service_toolbox_spark.session import local_frame
+
+_SCHEMA = "doc_id long, text string, source string"
 
 
 def _docs(spark):
@@ -23,7 +48,7 @@ def _docs(spark):
         (7, "red orange yellow green blue indigo violet", "src_b"),
         (8, "cat dog bird fish lizard horse goat", "src_b"),
     ]
-    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def test_stage_reasons_and_precedence(spark):
@@ -262,9 +287,11 @@ def test_near_dup_pass_runs_a_bounded_job_count(
     spark, tmp_path, monkeypatch, job_ids
 ):
     """A near-dup curation call plus materializing all three outputs runs
-    at most 30 jobs on the planted fixture read from parquet, as the
+    at most 13 jobs on the planted fixture read from parquet, as the
     benchmark reads its corpus: 44 when connected components ran its
-    rounds on the candidate graph, 27 with driver union-find."""
+    rounds on the candidate graph, 27 with driver union-find, 13 once
+    the quality, fingerprint and domain-cap verdicts became row and
+    window flags instead of joins."""
     monkeypatch.delenv("SPARK_GRAFT_PIN_STORAGE", raising=False)
     path = str(tmp_path / "docs.parquet")
     _docs(spark).write.parquet(path)
@@ -274,4 +301,211 @@ def test_near_dup_pass_runs_a_bounded_job_count(
         _answer(*curate_corpus(docs, near_dup=True, docs_per_source=1))
 
     jobs = job_ids("test-curate-near-dup-jobs", curate)
-    assert 0 < len(jobs) <= 30, jobs
+    assert 0 < len(jobs) <= 13, jobs
+
+
+def test_exact_pass_runs_a_bounded_job_count(
+    spark, tmp_path, monkeypatch, job_ids
+):
+    """A curation call without near-dup, capped at one doc per source,
+    plus materializing all three outputs runs at most 7 jobs on the
+    planted fixture read from parquet: 14 when the quality signal, the
+    fingerprint dedup and the domain cap each joined their result back,
+    7 with the row and window flags."""
+    monkeypatch.delenv("SPARK_GRAFT_PIN_STORAGE", raising=False)
+    path = str(tmp_path / "docs.parquet")
+    _docs(spark).write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def curate():
+        _answer(*curate_corpus(docs, near_dup=False, docs_per_source=1))
+
+    jobs = job_ids("test-curate-exact-jobs", curate)
+    assert 0 < len(jobs) <= 7, jobs
+
+
+def _grouped_repetition(docs, n=3):
+    """The repetition signal as the exploded ``(doc, gram)`` counts
+    grouped per doc: two shuffles, one row per doc with an n-gram."""
+    grams = docs.select(
+        "doc_id", tokens_of("text").alias("_toks")
+    ).select(
+        "doc_id",
+        F.explode(word_ngrams_from_tokens(F.col("_toks"), n)).alias("gram"),
+    )
+    cnt = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
+    return cnt.groupBy("doc_id").agg(
+        F.max("c").cast("int").alias("top_ngram_count"),
+        F.sum("c").cast("int").alias("n_ngrams"),
+        duck_round(F.max("c") / F.sum("c"), 4).cast("double").alias(
+            "top_ngram_share"
+        ),
+    )
+
+
+def _join_form_curate(
+    docs, min_tokens, near_dup, docs_per_source, max_top_trigram_share=0.5
+):
+    """Stages 1-4 and 7 of the cascade with every verdict computed
+    elsewhere and joined back by id: the grouped repetition signal, a
+    ``groupBy`` of fingerprints, and a window over the survivors only.
+    The reference the flag cascade must agree with."""
+    id_ = F.col("doc_id")
+    base = docs.select("doc_id", "text", "source")
+    quality = base.withColumn("_n_toks", F.size(tokens_of("text")))
+    rep = _grouped_repetition(docs).select(
+        F.col("doc_id").alias("_rep_id"), "top_ngram_share"
+    )
+    quality = quality.join(
+        rep, quality["doc_id"] == F.col("_rep_id"), "left"
+    ).drop("_rep_id")
+    reason = F.when(F.col("_n_toks") < min_tokens, "too_short").when(
+        F.col("top_ngram_share") > max_top_trigram_share, "repetitive"
+    )
+    staged = quality.withColumn("_reason", reason)
+
+    def drop(staged, ids):
+        return (
+            staged.join(ids.withColumnRenamed("_reason", "_r"), "doc_id", "left")
+            .withColumn("_reason", F.coalesce("_reason", "_r"))
+            .drop("_r")
+        )
+
+    alive = staged.filter(F.col("_reason").isNull())
+    fp = alive.select("doc_id", fingerprint("text").alias("_fp"))
+    keep_fp = fp.groupBy("_fp").agg(F.min(id_).alias("_keep_id"))
+    dup = (
+        fp.join(keep_fp, "_fp")
+        .filter(id_ != F.col("_keep_id"))
+        .select("doc_id", F.lit("duplicate").alias("_reason"))
+    )
+    staged = drop(staged, dup)
+    if near_dup:
+        alive = staged.filter(F.col("_reason").isNull())
+        cand = minhash_candidates(
+            alive, "doc_id", F.array_distinct(tokens_of("text")), k=16, bands=8
+        ).filter(F.col("est_jaccard") >= 0.5)
+        comp = connected_components(cand, "doc_a", "doc_b")
+        near = comp.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("doc_id"), F.lit("near_duplicate").alias("_reason")
+        )
+        staged = drop(staged, near)
+    if docs_per_source is not None:
+        w = Window.partitionBy("source").orderBy(F.md5(id_.cast("string")), id_)
+        over = (
+            staged.filter(F.col("_reason").isNull())
+            .withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") > docs_per_source)
+            .select("doc_id", F.lit("domain_capped").alias("_reason"))
+        )
+        staged = drop(staged, over)
+    kept = docs.join(
+        staged.filter(F.col("_reason").isNull()).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    dropped = staged.filter(F.col("_reason").isNotNull()).select(
+        "doc_id", F.col("_reason").alias("reason")
+    )
+    stats = (
+        staged.select(F.coalesce("_reason", F.lit("kept")).alias("reason"))
+        .groupBy("reason")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return kept, dropped, stats
+
+
+_WORDS = ("ant", "bee", "cat", "dog", "eel", "fox")
+
+
+@st.composite
+def _corpora(draw):
+    """``(rows, min_tokens)``: random docs over a six-word vocabulary
+    mixed with reordered exact copies, repetitive docs, too-short docs
+    and docs with no trigrams (NULL, empty, one or two tokens); ids
+    shuffled so a copy can carry the lower id, sources include NULL."""
+    def words(lo, hi):
+        return draw(st.lists(st.sampled_from(_WORDS), min_size=lo, max_size=hi))
+
+    texts = []
+    for _ in range(draw(st.integers(1, 14))):
+        kind = draw(st.sampled_from(
+            ("random", "copy", "repetitive", "short", "no_trigrams")
+        ))
+        earlier = [t.split(" ") for t in texts if t]
+        if kind == "copy" and earlier:
+            toks = draw(st.permutations(draw(st.sampled_from(earlier))))
+        elif kind == "repetitive":
+            toks = [draw(st.sampled_from(_WORDS))] * draw(st.integers(3, 9))
+        elif kind == "short":
+            toks = words(1, 4)
+        elif kind == "no_trigrams":
+            texts.append(draw(st.sampled_from((None, "", "ant", "bee cat"))))
+            continue
+        else:
+            toks = words(3, 10)
+        texts.append(" ".join(toks))
+    ids = draw(st.permutations(range(len(texts))))
+    sources = [draw(st.sampled_from(("s1", "s2", None))) for _ in texts]
+    min_tokens = draw(st.sampled_from((0, 2, 5)))
+    return list(zip(ids, texts, sources)), min_tokens
+
+
+@pytest.mark.parametrize("near_dup", [False, True], ids=["exact", "near_dup"])
+@pytest.mark.parametrize("docs_per_source", [None, 0, 1, 2])
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=_corpora())
+@example(corpus=(
+    [
+        (0, "ant bee cat dog eel", "s1"),
+        (1, "eel dog cat bee ant", None),
+        (2, "ant ant ant ant ant", None),
+        (3, "", "s2"),
+        (4, None, "s2"),
+        (5, "ant bee", "s1"),
+    ],
+    0,
+))
+def test_flag_cascade_matches_join_form(spark, corpus, near_dup, docs_per_source):
+    """The window-flag cascade gives exactly the kept ids, dropped
+    ``(id, reason)`` rows and stats of the join-form reference."""
+    rows, min_tokens = corpus
+    docs = local_frame(spark, rows, _SCHEMA)
+    kw = dict(
+        min_tokens=min_tokens, near_dup=near_dup, docs_per_source=docs_per_source
+    )
+    assert _answer(*curate_corpus(docs, **kw)) == _answer(
+        *_join_form_curate(docs, **kw)
+    )
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(
+    st.one_of(
+        st.none(),
+        # single-gram docs: exactly three tokens
+        st.lists(st.sampled_from(("x", "y")), min_size=3, max_size=3),
+        # two words make ties between grams common
+        st.lists(st.sampled_from(("x", "y")), max_size=9),
+        st.lists(st.sampled_from(("x", "y", "z")), max_size=9),
+    ).map(lambda t: t if t is None else " ".join(t)),
+    max_size=12,
+))
+@example(["x y x y", "x x y y", "x y z", "x x x", "x y", None, ""])
+def test_row_repetition_matches_grouped_counts(spark, texts):
+    """repetition_features (the per-row fold) gives exactly the rows of
+    grouping the exploded ``(doc, gram)`` counts per doc."""
+    docs = local_frame(
+        spark, [(i, t, "s") for i, t in enumerate(texts)], _SCHEMA
+    )
+    per_row = repetition_features(docs, "doc_id").collect()
+    grouped = _grouped_repetition(docs).collect()
+    assert sorted(map(tuple, per_row)) == sorted(map(tuple, grouped))

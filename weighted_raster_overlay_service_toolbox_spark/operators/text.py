@@ -108,9 +108,45 @@ def word_ngrams(text_col: str | Column, n: int = 3) -> Column:
     this form cost 35.1s vs 2.1s after projecting ``tokens_of()`` into
     a column first -- 17x. Fine for one-shot expressions over short
     strings; every corpus-sized consumer should project tokens and call
-    :func:`word_ngrams_from_tokens` (repetition_features and the
+    :func:`word_ngrams_from_tokens` (with_repetition and the
     source-overlap pair do)."""
     return word_ngrams_from_tokens(tokens_of(text_col), n)
+
+
+#: SQL text folding the sorted n-gram array ``_grams`` to its longest run
+#: of equal elements: the count of its most repeated n-gram, 0 when empty.
+#: Text, not Column lambdas: built from Columns the fold costs about 0.15 s
+#: of py4j per call.
+_TOP_RUN_SQL = (
+    "aggregate(array_sort(_grams), "
+    "named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'top', 0), "
+    "(acc, g) -> CASE WHEN g = acc.prev "
+    "THEN named_struct('prev', g, 'run', acc.run + 1, "
+    "'top', greatest(acc.top, acc.run + 1)) "
+    "ELSE named_struct('prev', g, 'run', 1, 'top', greatest(acc.top, 1)) "
+    "END, acc -> acc.top)"
+)
+
+
+def with_repetition(df: DataFrame, toks_col: str, n: int = 3) -> DataFrame:
+    """``df`` plus the Gopher-style repetition signal of each row's
+    token-array column ``toks_col``: ``top_ngram_count`` (the count of
+    its most repeated word n-gram), ``n_ngrams`` and ``top_ngram_share``
+    (their ratio through ``duck_round(..., 4)``; NULL for a row with no
+    n-grams).
+
+    A per-row expression: no explode, no shuffle, no join. ``toks_col``
+    must be a projected column, not the split expression (the
+    word_ngrams quadratic trap, r9)."""
+    top, total = F.col("top_ngram_count"), F.col("n_ngrams")
+    return (
+        df.withColumn("_grams", word_ngrams_from_tokens(F.col(toks_col), n))
+        .withColumns(
+            {"top_ngram_count": F.expr(_TOP_RUN_SQL), "n_ngrams": F.size("_grams")}
+        )
+        .drop("_grams")
+        .withColumn("top_ngram_share", F.when(total > 0, duck_round(top / total, 4)))
+    )
 
 
 def repetition_features(
@@ -120,23 +156,18 @@ def repetition_features(
     word n-grams taken by its single most-repeated n-gram (boilerplate
     and low-quality generated text score high).
 
-    Shape: tokenize-projection -> explode -> (doc, gram) count -> per-doc
-    max/sum. The token array is materialized in its own projection
-    BEFORE the gram expression references it (the word_ngrams quadratic
-    trap, r9). Both aggregations key on (doc_id[, gram]) -- uniform,
-    map-side combined; nothing leaves the executor except per-doc rows.
-    Docs shorter than ``n`` tokens produce no row (no grams to score)."""
-    grams = docs.select(
+    ``(doc_id, top_ngram_count, n_ngrams, top_ngram_share)``: one row per
+    input row that has at least one n-gram; docs shorter than ``n``
+    tokens produce no row. A projection of :func:`with_repetition`, the
+    per-row signal ``curate_corpus`` filters on: no shuffle. It equals
+    grouping the exploded ``(doc, gram)`` counts by ``doc_id`` when
+    ``doc_id`` is unique, as it is in every fixture; two rows sharing an
+    id stay two rows here."""
+    toks = docs.select(
         F.col(id_col).alias("doc_id"), tokens_of(text_col).alias("_toks")
-    ).select(
-        "doc_id",
-        F.explode(word_ngrams_from_tokens(F.col("_toks"), n)).alias("gram"),
-    )
-    cnt = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
-    return cnt.groupBy("doc_id").agg(
-        F.max("c").cast("int").alias("top_ngram_count"),
-        F.sum("c").cast("int").alias("n_ngrams"),
-        duck_round(F.max("c") / F.sum("c"), 4).cast("double").alias("top_ngram_share"),
+    ).filter(F.size("_toks") >= n)
+    return with_repetition(toks, "_toks", n).select(
+        "doc_id", "top_ngram_count", "n_ngrams", "top_ngram_share"
     )
 
 

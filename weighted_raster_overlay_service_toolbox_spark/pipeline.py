@@ -26,11 +26,14 @@ all of the work waits for the caller's first action.
   ``stats`` (one ``groupBy`` over it). All three read the same verdict, so
   materializing all three runs the cascade once, not once per output.
 
-Stage costs: quality/fingerprint are narrow + one hash shuffle; near-dup
-clustering adds the banded-LSH join and the components; the domain cap
-is one window shuffle keyed by source. Only the candidate edges (up to
-the components' driver threshold) and whatever the caller collects reach
-the driver.
+Stage costs: the quality signals (token count, top trigram share) are
+row expressions: no shuffle. Fingerprint dedup and the domain cap each
+set ``_reason`` in place through one window shuffle, keyed by
+fingerprint and by source. Near-dup clustering adds the
+banded-LSH join and the components; it and the image and contamination
+stages join their verdicts back by id. Only the candidate edges (up to
+the components' driver threshold) and whatever the caller collects
+reach the driver.
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import minhash_candidates, minhash_verified_edges
 from .operators.graph import connected_components
-from .operators.text import fingerprint, repetition_features, tokens_of
+from .operators.text import fingerprint, tokens_of, with_repetition
 from .plans.pinning import pin_corpus
 
 
@@ -79,7 +82,7 @@ def curate_corpus(
     2. ``repetitive`` -- top word-trigram share above the threshold
        (Gopher-style boilerplate signal); docs with no trigrams pass;
     3. ``duplicate``  -- same canonical token-set fingerprint as a
-       lower-id doc (catches exact and reordered copies);
+       lower-id surviving doc (catches exact and reordered copies);
     4. ``near_duplicate`` (opt-in) -- MinHash-LSH candidates merged into
        connected components; every member but the component minimum
        drops. With ``near_dup_exact_jaccard`` set, candidates are
@@ -122,45 +125,36 @@ def curate_corpus(
             + ")"
         )
     id_ = F.col(id_col)
-    base = docs.select(id_col, text_col, source_col)
-
-    # stage 1+2: per-doc quality signals (narrow + one (doc, gram) shuffle)
-    n_toks = F.size(tokens_of(text_col))
-    quality = base.withColumn("_n_toks", n_toks)
-    rep = repetition_features(docs, id_col, text_col).select(
-        F.col("doc_id").alias("_rep_id"), "top_ngram_share"
+    survives = F.col("_reason").isNull()
+    base = docs.select(
+        id_col, text_col, source_col, tokens_of(text_col).alias("_toks")
     )
-    quality = quality.join(
-        rep, quality[id_col] == F.col("_rep_id"), "left"
-    ).drop("_rep_id")
 
-    too_short = F.col("_n_toks") < min_tokens
+    # stage 1+2: per-doc quality signals, one row expression each
+    quality = with_repetition(base, "_toks")
+    too_short = F.size("_toks") < min_tokens
     repetitive = (
         (F.col("top_ngram_share") > max_top_trigram_share)
         if max_top_trigram_share is not None
         else F.lit(False)
     )
     reason = F.when(too_short, "too_short").when(repetitive, "repetitive")
-    staged = quality.withColumn("_reason", reason)
+    staged = quality.select(id_col, text_col, source_col, reason.alias("_reason"))
 
-    # stage 3: fingerprint dedup among survivors (one hash shuffle)
-    alive = staged.filter(F.col("_reason").isNull())
-    fp = alive.select(id_col, fingerprint(text_col).alias("_fp"))
-    keep_fp = fp.groupBy("_fp").agg(F.min(id_).alias("_keep_id"))
-    dup = (
-        fp.join(keep_fp, "_fp")
-        .filter(id_ != F.col("_keep_id"))
-        .select(id_col, F.lit("duplicate").alias("_reason"))
+    # stage 3: fingerprint dedup among survivors. One window keyed by
+    # fingerprint: a survivor above its group's lowest surviving id is a
+    # duplicate. Dropped rows keep their own fingerprint as the key, so
+    # they spread over the partitions instead of sharing one NULL key.
+    first = F.min(F.when(survives, id_)).over(
+        Window.partitionBy(fingerprint(text_col))
     )
-    staged = (
-        staged.join(dup.withColumnRenamed("_reason", "_dup_reason"), id_col, "left")
-        .withColumn("_reason", F.coalesce("_reason", "_dup_reason"))
-        .drop("_dup_reason")
+    staged = staged.withColumn(
+        "_reason", F.coalesce("_reason", F.when(id_ != first, "duplicate"))
     )
 
     # stage 4 (opt-in): near-dup clusters among survivors
     if near_dup:
-        alive = staged.filter(F.col("_reason").isNull()).select(id_col, text_col)
+        alive = staged.filter(survives).select(id_col, text_col)
         toks = F.array_distinct(tokens_of(text_col))
         # Banding is a TUNING surface, not a constant: k/bands set the
         # LSH collision threshold t = (1/bands)^(bands/k) -- the default
@@ -202,7 +196,7 @@ def curate_corpus(
         from .operators.multimodal import ahash_ppm, phash_components
 
         alive_img = docs.join(
-            staged.filter(F.col("_reason").isNull()).select(id_col),
+            staged.filter(survives).select(id_col),
             id_col,
             "left_semi",
         ).select(id_col, image_payload_col)
@@ -266,7 +260,7 @@ def curate_corpus(
         ev_keyed = eval_ids.select(
             F.col(eval_ids.columns[0]).alias(id_col)
         )
-        alive = staged.filter(F.col("_reason").isNull()).select(id_col)
+        alive = staged.filter(survives).select(id_col)
         # Eval members present in `docs` drop with their own reason:
         # 'they gate, they don't flow' means the eval suite itself must
         # never ship in the curated training corpus (r13 review -- the
@@ -299,21 +293,19 @@ def curate_corpus(
             .drop("_ct_reason")
         )
 
-    # stage 7 (opt-in): domain balancing among survivors
+    # stage 7 (opt-in): domain balancing among survivors. One window per
+    # source ranks the survivors first, in md5 order; a survivor ranked
+    # past the cap is capped.
     if docs_per_source is not None:
         w = Window.partitionBy(source_col).orderBy(
-            F.md5(id_.cast("string")), id_
+            survives.desc(), F.md5(id_.cast("string")), id_
         )
-        over = (
-            staged.filter(F.col("_reason").isNull())
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") > docs_per_source)
-            .select(id_col, F.lit("domain_capped").alias("_dc_reason"))
-        )
-        staged = (
-            staged.join(over, id_col, "left")
-            .withColumn("_reason", F.coalesce("_reason", "_dc_reason"))
-            .drop("_dc_reason")
+        staged = staged.withColumn(
+            "_reason",
+            F.coalesce(
+                "_reason",
+                F.when(F.row_number().over(w) > docs_per_source, "domain_capped"),
+            ),
         )
 
     # The three outputs share one (id, reason) verdict: pinned once, so a

@@ -1956,8 +1956,10 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signal: the share of each doc's
     word trigrams taken by its most-repeated trigram -- boilerplate and
     degenerate generated text score high and get filtered before
-    training. Two uniform keyed aggregations, map-side combined; docs
-    under 3 tokens yield no row on either engine."""
+    training. One row expression per document (operators/text.py
+    with_repetition): no shuffle. Docs under 3 tokens yield no row on
+    either engine; the oracle groups by ``doc_id``, which is unique in
+    every fixture."""
     from ..operators.text import repetition_features
 
     return repetition_features(

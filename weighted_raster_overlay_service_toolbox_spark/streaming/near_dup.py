@@ -290,10 +290,12 @@ def run_near_dup_ingest(
         # part files PER MICRO-BATCH plus per-file ceremony, and the
         # read-back pays per-file open cost again. Survivor rows are
         # id-only (one long each) -- even a 100 TB ingest's per-batch
-        # survivor list coalesces into file counts of ones, not
-        # hundreds; narrow (no shuffle), values and batch_id layout
-        # unchanged.
-        surv.coalesce(1).write.mode("overwrite").parquet(
+        # survivor list fits file counts of ones, not hundreds. A
+        # repartition, not a coalesce: coalesce(1) would also fold the
+        # per-doc band aggregation above it into one task, while the
+        # exchange keeps that aggregation parallel and moves only the
+        # id-only survivor rows. Values and batch_id layout unchanged.
+        surv.repartition(1).write.mode("overwrite").parquet(
             os.path.join(sink_dir, f"batch_id={batch_id}")
         )
         if _on_batch_end is not None:
